@@ -36,6 +36,7 @@ import os
 import subprocess
 import sys
 import time
+import uuid
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
@@ -784,7 +785,9 @@ def run_pagerank_bench(cpus: int = CPUS) -> dict:
         )
     )
     edges.cache()
-    n_edges = edges.count()
+    # the edges the operator iterates over: it drops self-loops and
+    # duplicate (src, dst) rows before the loop
+    n_edges = edges.filter(F.col("src") != F.col("dst")).distinct().count()
     nodes = ids.select(F.col("id").alias("node"))
 
     # bucketed edge table is the production path (exchange-free edge scans
@@ -792,7 +795,7 @@ def run_pagerank_bench(cpus: int = CPUS) -> dict:
     bucket = (
         None
         if os.environ.get("SPARK_GRAFT_PR_NO_BUCKET")
-        else "_bench_pagerank_edges"
+        else f"_bench_pagerank_edges_{uuid.uuid4().hex[:8]}"
     )
     # warm-up runs the SAME path as the measurement (codegen/JIT; and the
     # plain path's 46M-row edge checkpoint would OOM a heap the bucketed

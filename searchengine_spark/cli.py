@@ -25,6 +25,7 @@ import argparse
 import json
 import sys
 import time
+import uuid
 
 
 def _spark(args):
@@ -240,7 +241,9 @@ def cmd_linkrank(args) -> int:
         nodes=pages.select("url"),
         iterations=args.iterations,
         damping=args.damping,
-        bucket_table="_cli_linkrank_edges",
+        # per-run name: concurrent linkrank jobs sharing a metastore must
+        # not overwrite or drop each other's bucketed edge table
+        bucket_table=f"_cli_linkrank_edges_{uuid.uuid4().hex[:8]}",
         n_buckets=args.partitions,
         weight=weight,
     ).select(F.col("node").alias("url"), "pr")

@@ -10,9 +10,10 @@ quantization — as composable plans over ANY embeddings DataFrame:
 * :func:`cosine_topk` — exact full-scan baseline (the correctness oracle).
 * :func:`lsh_bucket_topk` — sign-bucket prune: score only the query's
   bucket (~1/2^n_planes of the corpus per probe).
-* :func:`lsh_neardup_pairs` — banded-LSH near-duplicate pairs: band explode
-  → self-join on (band, key); the shuffle IS the bucketing, no O(n²) pair
-  scan ever happens (recall follows the standard banded bound 1-(1-p^r)^b).
+* :func:`lsh_neardup_pairs` — banded-LSH near-duplicate pairs: band keys
+  sliced from the sign-bit bucket, candidates from the shared banded join
+  (plans/dedup.py), exact cosine on the survivors (recall follows the
+  standard banded bound 1-(1-p^r)^b).
 * :func:`ivf_topk` — inverted-file probe: assign vectors to their nearest
   coarse centroid once (broadcast join), probe the query's n_probe cells.
 
@@ -34,6 +35,8 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from searchengine_spark.plans import dedup
 
 
 def dot_expr(x: Column, y: Column) -> Column:
@@ -167,44 +170,25 @@ def lsh_neardup_pairs(
     """Embedding-cosine near-duplicate pairs via banded LSH.
 
     ``bands`` lists, per band, the plane indices whose sign bits form that
-    band's key. Vectors sharing ANY band key become candidate pairs (band
-    explode → self-join on (band, key) — the shuffle is the bucketing);
+    band's key (sliced out of the :func:`assign_lsh_buckets` bucket).
+    Vectors sharing ANY band key become candidate pairs
+    (:func:`dedup.banded_candidate_pairs` — the shuffle is the bucketing);
     exact cosine keeps pairs ≥ threshold. Columns: (vec_a, vec_b, sim)."""
-    v = F.col(vec_col).cast("array<double>")
-    bits = []
-    for plane in planes:
-        p = F.array(*[F.lit(float(c)) for c in plane])
-        bits.append(F.when(dot_expr(v, p) > 0, F.lit(1)).otherwise(F.lit(0)))
-    band_structs = []
-    for bi, plane_idxs in enumerate(bands):
-        key = None
-        for pos, pi in enumerate(plane_idxs):
-            term = bits[pi] * (1 << pos)
-            key = term if key is None else key + term
-        band_structs.append(
-            F.struct(F.lit(bi).alias("band"), key.alias("key"))
-        )
-    banded = df.select(
-        id_col, v.alias("v"), F.explode(F.array(*band_structs)).alias("b")
-    ).select(id_col, "v", F.col("b.band").alias("band"), F.col("b.key").alias("key"))
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("vec_a"),
-            F.col(f"b.{id_col}").alias("vec_b"),
-            F.col("a.v").alias("va"),
-            F.col("b.v").alias("vb"),
-        )
-        .dropDuplicates(["vec_a", "vec_b"])
+    if any(not 0 <= pi < len(planes) for band in bands for pi in band):
+        raise ValueError(f"bands {bands} name a plane outside 0..{len(planes) - 1}")
+    e = assign_lsh_buckets(
+        df.select(id_col, F.col(vec_col).cast("array<double>").alias("v")), planes, vec_col="v"
     )
+    keys = [
+        sum(
+            F.shiftleft(F.shiftright("bucket", pi).bitwiseAND(1), pos)
+            for pos, pi in enumerate(band)
+        )
+        for band in bands
+    ]
+    cand = dedup.banded_candidate_pairs(e, id_col, keys, ("vec_a", "vec_b"), carry="v")
     return (
-        cand.select("vec_a", "vec_b", cosine_expr(F.col("va"), F.col("vb")).alias("sim"))
+        cand.select("vec_a", "vec_b", cosine_expr(F.col("v_a"), F.col("v_b")).alias("sim"))
         .filter(F.col("sim") >= threshold)
     )
 

@@ -297,11 +297,13 @@ def outlinks(pages: DataFrame) -> DataFrame:
 
 
 # anchor text: the inner text of a complete, well-formed <a ...>...</a>
-# element (non-greedy to the nearest close tag). Pathological markup — an
-# unclosed <a>, overlapping anchors — simply yields no match for that
-# link: anchor text is a best-effort SIGNAL extractor, never a parser of
-# record (T2 extraction is the byte-pinned parser; this is deliberately
-# lighter, like production anchor harvesters).
+# element (non-greedy to the nearest close tag). Anchor text is a
+# best-effort SIGNAL extractor, never a parser of record (T2 extraction is
+# the byte-pinned parser; this is deliberately lighter, like production
+# anchor harvesters), so it knowingly differs from extract_links on two
+# kinds of pathological markup: an unclosed <a> yields no anchor for that
+# link, and nested or overlapping anchors pair the first open tag with the
+# nearest close tag, so the inner link is swallowed into the outer text.
 _RE_ANCHOR = re.compile(
     r"""<a\b[^>]*\bhref\s*=\s*("([^"]*)"|'([^']*)')[^>]*>(.*?)</a\s*>""",
     re.IGNORECASE | re.DOTALL,

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from searchengine_spark.config import DEFAULT_STOPWORDS, K1, B
 from searchengine_spark.operators import gates
+from searchengine_spark.plans import dedup
 
 STOP = sorted(DEFAULT_STOPWORDS)
 _STOP_IN = "(" + ", ".join(f"'{s}'" for s in STOP) + ")"
@@ -708,41 +709,12 @@ FROM toks"""
 # ---------------------------------------------------------------- dedup: MinHash LSH band pairs
 def q_minhash_lsh_pairs(spark, sf_dir) -> DataFrame:
     """Full MinHash+LSH near-dup pipeline: 4 minhash signatures → 4 bands of
-    1 → band-bucket self-join → candidate pairs with band-agreement count.
-    The join is on (band, hash) — at scale the bucket re-partitioning IS the
-    shuffle; no pairwise O(n²) comparison ever happens."""
-    t = _terms(spark, sf_dir)
-    sigs = t.groupBy("doc_id").agg(
-        *[
-            F.min(
-                F.md5(F.concat(F.lit(f"{i}:"), F.col("term")).cast("binary"))
-            ).alias(f"mh{i}")
-            for i in range(4)
-        ]
-    )
-    bands = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(i).alias("band"), F.col(f"mh{i}").alias("h"))
-                    for i in range(4)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", F.col("b.band").alias("band"), F.col("b.h").alias("h"))
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.countDistinct("a.band").cast("long").alias("n_bands"))
+    1 → band-bucket self-join (dedup.banded_candidate_pairs) → candidate
+    pairs with band-agreement count. The join is on (band, hash) — at scale
+    the bucket re-partitioning IS the shuffle; no pairwise O(n²) scan."""
+    sigs = q_minhash_signatures(spark, sf_dir)
+    return dedup.banded_candidate_pairs(
+        sigs, "doc_id", [f"mh{i}" for i in range(4)], ("doc_a", "doc_b")
     )
 
 
@@ -760,80 +732,15 @@ FROM bands a JOIN bands b ON a.band = b.band AND a.h = b.h AND a.doc_id < b.doc_
 GROUP BY 1, 2"""
 
 
-JACCARD_DUP_THRESHOLD = 0.5
-
-
-def jaccard_verify_pairs(
-    pairs: DataFrame,
-    elems: DataFrame,
-    threshold: float = JACCARD_DUP_THRESHOLD,
-    id_a: str = "doc_a",
-    id_b: str = "doc_b",
-    id_col: str = "doc_id",
-    set_col: str = "terms",
-) -> DataFrame:
-    """Exact-Jaccard VERIFICATION of sketch-generated candidate pairs — the
-    second stage of the standard near-dup pipeline (MinHash/LSH proposes,
-    exact similarity disposes; false positives from band collisions die
-    here, and only here, so the pipeline is exact given candidate recall).
-
-    ``pairs``: (id_a, id_b, *extras) candidate pairs; ``elems``: one row
-    per id with its distinct element array (``set_col``) — for MinHash over
-    tokens that is the doc's distinct TERM set, i.e. exactly the quantity
-    the sketch estimates. Appends (jaccard, is_dup) to the pair rows.
-
-    Scale shape: two hash joins keyed on the pair ids (the candidate set
-    is orders of magnitude smaller than n² — that was the sketch's job)
-    plus a map-side intersect/union size; no pairwise scan, nothing
-    quadratic, and the element arrays travel only to matched pairs.
-
-    A pair id with NO row in ``elems`` (mismatched tokenizer runs, a
-    stale snapshot) fails LOUDLY at execution instead of silently
-    vanishing from the output — a proposed near-dup must be confirmed or
-    rejected, never dropped unjudged (same contract as the PQ codebook
-    and phrase extra_cols guards)."""
-
-    def _guarded(side: str, idc: str):
-        return F.when(F.col(side).isNotNull(), F.col(side)).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        "jaccard_verify_pairs: no element-set row for "
-                        f"pair id in '{idc}' (id="
-                    ),
-                    F.col(idc).cast("string"),
-                    F.lit(") — pairs and elems disagree on the id universe"),
-                )
-            )
-        )
-
-    ea = elems.select(F.col(id_col).alias(id_a), F.col(set_col).alias("_sa"))
-    eb = elems.select(F.col(id_col).alias(id_b), F.col(set_col).alias("_sb"))
-    j = (
-        pairs.join(ea, id_a, "left")
-        .join(eb, id_b, "left")
-        .withColumn("_sa", _guarded("_sa", id_a))
-        .withColumn("_sb", _guarded("_sb", id_b))
-    )
-    inter = F.size(F.array_intersect("_sa", "_sb")).cast("double")
-    union = F.size("_sa").cast("double") + F.size("_sb").cast("double") - inter
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    return j.select(
-        *[c for c in pairs.columns],
-        F.round(jac, 6).alias("jaccard"),
-        (jac >= F.lit(threshold)).cast("int").alias("is_dup"),
-    )
-
-
 def q_minhash_jaccard_verified(spark, sf_dir) -> DataFrame:
     """The full two-stage near-dup pipeline over ``documents``: MinHash-LSH
     candidate pairs (q_minhash_lsh_pairs — bucket join, never pairwise) →
-    exact term-set Jaccard verification (:func:`jaccard_verify_pairs`)."""
+    exact term-set Jaccard verification (dedup.jaccard_verify_pairs)."""
     t = _terms(spark, sf_dir)
     term_sets = t.groupBy("doc_id").agg(
         F.array_distinct(F.collect_list("term")).alias("terms")
     )
-    return jaccard_verify_pairs(q_minhash_lsh_pairs(spark, sf_dir), term_sets)
+    return dedup.jaccard_verify_pairs(q_minhash_lsh_pairs(spark, sf_dir), term_sets)
 
 
 # the candidate stage is the LSH oracle itself, embedded as a subquery —
@@ -857,7 +764,7 @@ scored AS (
               LEFT JOIN tsets tb ON c.doc_b = tb.doc_id)
 SELECT doc_a, doc_b, n_bands,
        ROUND(CASE WHEN u > 0 THEN i / u ELSE 0 END, 6) AS jaccard,
-       CAST(CASE WHEN u > 0 THEN i / u ELSE 0 END >= {JACCARD_DUP_THRESHOLD}
+       CAST(CASE WHEN u > 0 THEN i / u ELSE 0 END >= {dedup.JACCARD_DUP_THRESHOLD}
             AS INTEGER) AS is_dup
 FROM scored"""
 SQL_MINHASH_JACCARD_VERIFIED = SQL_MINHASH_JACCARD_VERIFIED.replace(
@@ -909,81 +816,11 @@ sums AS (SELECT doc_id, {_SIMHASH_SUMS} FROM tf GROUP BY doc_id)
 SELECT doc_id, CAST({_SIMHASH_BITS} AS BIGINT) AS simhash FROM sums"""
 
 
-def simhash_neardup_pairs(
-    sig: DataFrame,
-    n_bits: int = 16,
-    n_bands: int = 4,
-    max_hamming: int = 3,
-    id_col: str = "doc_id",
-    sim_col: str = "simhash",
-) -> DataFrame:
-    """EXACT Hamming-neighbor pairs over a SimHash signature frame via
-    banded blocking (Charikar '02 signatures + the multi-index pigeonhole
-    of Manku et al., WWW'07 "Detecting Near-Duplicates for Web Crawling"):
-    split each ``n_bits`` signature into ``n_bands`` equal-width band keys;
-    two signatures within Hamming distance ``max_hamming < n_bands`` MUST
-    agree on at least one whole band (pigeonhole), so the band-keyed
-    self-join finds every qualifying pair — never a pairwise scan — and
-    the popcount-of-XOR filter then makes the result exact, no false
-    positives. Returns (doc_a, doc_b, hamming), doc_a < doc_b.
-
-    Scale shape: one explode (n_bands rows/doc) + one equi-join keyed on
-    (band, key) + one distinct — the same bucket-join shape as
-    MinHash-LSH. Bucket fan-in is corpus/2^(n_bits/n_bands) per key, so
-    PRODUCTION uses 64-bit signatures with 16-bit bands (65,536 buckets
-    per band); the driver-contract query runs the identical plan at 16/4
-    where the DuckDB twin is exact. ``max_hamming >= n_bands`` would break
-    the pigeonhole guarantee (missed pairs), so it fails loudly."""
-    if n_bits % n_bands:
-        raise ValueError(f"n_bits={n_bits} not divisible by n_bands={n_bands}")
-    if max_hamming >= n_bands:
-        raise ValueError(
-            f"max_hamming={max_hamming} >= n_bands={n_bands}: the banded "
-            "blocking would MISS pairs (pigeonhole needs one clean band); "
-            "raise n_bands or lower max_hamming"
-        )
-    w = n_bits // n_bands
-    mask = (1 << w) - 1
-    bands = sig.select(
-        F.col(id_col).alias("_id"),
-        F.col(sim_col).cast("long").alias("_sim"),
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.shiftright(F.col(sim_col).cast("long"), b * w)
-                    .bitwiseAND(F.lit(mask))
-                    .alias("key"),
-                )
-                for b in range(n_bands)
-            ])
-        ).alias("bk"),
-    ).select("_id", "_sim", "bk.band", "bk.key")
-    a = bands.select(
-        F.col("_id").alias("doc_a"), F.col("_sim").alias("_sa"), "band", "key"
-    )
-    b = bands.select(
-        F.col("_id").alias("doc_b"), F.col("_sim").alias("_sb"), "band", "key"
-    )
-    cand = (
-        a.join(b, ["band", "key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "_sa", "_sb")
-        .distinct()
-    )
-    ham = F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb")))
-    return (
-        cand.withColumn("hamming", ham.cast("int"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
-    )
-
-
 def q_simhash_neardup_pairs(spark, sf_dir) -> DataFrame:
     """Banded SimHash near-dup pairs over ``documents``: every doc pair
     within Hamming distance 3 of the 16-bit signature (exact — see
-    :func:`simhash_neardup_pairs`)."""
-    return simhash_neardup_pairs(q_simhash16(spark, sf_dir))
+    :func:`dedup.simhash_neardup_pairs`)."""
+    return dedup.simhash_neardup_pairs(q_simhash16(spark, sf_dir))
 
 
 SQL_SIMHASH_NEARDUP = f"""WITH {_TERMS_CTE},
@@ -1098,20 +935,24 @@ def q_ann_lsh_bucketed(spark, sf_dir) -> DataFrame:
 
 
 # ------------------------------------------------------- dedup: embedding-cosine near-dup
+def _embedding_neardup(spark, sf_dir) -> DataFrame:
+    """The embedding near-dup pair graph every dedup row shares."""
+    from searchengine_spark.plans import ann
+
+    return ann.lsh_neardup_pairs(
+        _embeddings(spark, sf_dir), planes=_planes(), bands=[[0, 1], [2, 3]], threshold=0.4
+    )
+
+
 def q_embedding_neardup(spark, sf_dir) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via the engine API
     (plans/ann.py:lsh_neardup_pairs): 4 sign bits split into 2 bands of 2;
     vectors sharing ANY band key become candidates (band explode →
     self-join — the shuffle IS the bucketing, no O(n²) pair scan); exact
     cosine keeps pairs ≥ 0.4. Banded-LSH recall bound: 1-(1-p²)²."""
-    from searchengine_spark.plans import ann
-
-    return ann.lsh_neardup_pairs(
-        _embeddings(spark, sf_dir),
-        planes=_planes(),
-        bands=[[0, 1], [2, 3]],
-        threshold=0.4,
-    ).select("vec_a", "vec_b", F.round("sim", 5).alias("sim"))
+    return _embedding_neardup(spark, sf_dir).select(
+        "vec_a", "vec_b", F.round("sim", 5).alias("sim")
+    )
 
 
 # ------------------------------------------------------- similarity: IVF probe-2 ANN
@@ -1333,6 +1174,9 @@ def _sql_bit(j: int) -> str:
     return f"(CASE WHEN list_dot_product(v, {_sql_plane(j)}) > 0 THEN 1 ELSE 0 END)"
 
 
+# the embedding twins join vectors back onto the distinct id pairs: a
+# FIRST() aggregate over a LIST column peaked at ~8 GB RSS in DuckDB 1.0
+# for the ~48k candidate groups of sf0.01 (the join-back: ~0.2 GB)
 SQL_EMBEDDING_NEARDUP = f"""WITH e AS (
   SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 keys AS (SELECT vec_id, v,
@@ -1342,11 +1186,11 @@ bands AS (
   SELECT vec_id, v, band, CASE band WHEN 0 THEN k0 ELSE k1 END AS key
   FROM keys CROSS JOIN (SELECT unnest([0, 1]) AS band)),
 cand AS (
-  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b,
-         FIRST(a.v) AS va, FIRST(b.v) AS vb
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.key = b.key AND a.vec_id < b.vec_id
-  GROUP BY a.vec_id, b.vec_id)
+  SELECT p.vec_a, p.vec_b, ea.v AS va, eb.v AS vb FROM (
+    SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
+    FROM bands a JOIN bands b
+      ON a.band = b.band AND a.key = b.key AND a.vec_id < b.vec_id) p
+  JOIN e ea ON ea.vec_id = p.vec_a JOIN e eb ON eb.vec_id = p.vec_b)
 SELECT vec_a, vec_b, ROUND(sim, 5) AS sim FROM (
   SELECT vec_a, vec_b,
          list_dot_product(va, vb)
@@ -1362,14 +1206,9 @@ def q_dedup_clusters(spark, sf_dir) -> DataFrame:
     join+agg per round), with the component-minimum id as the canonical
     survivor. The step between q_embedding_neardup's PAIRS and a dedup
     pass actually DROPPING rows."""
-    from searchengine_spark.plans import ann, graph
+    from searchengine_spark.plans import graph
 
-    pairs = ann.lsh_neardup_pairs(
-        _embeddings(spark, sf_dir),
-        planes=_planes(),
-        bands=[[0, 1], [2, 3]],
-        threshold=0.4,
-    )
+    pairs = _embedding_neardup(spark, sf_dir)
     return graph.dedup_clusters(pairs).orderBy("vec_id")
 
 
@@ -1386,12 +1225,12 @@ bands AS (
   SELECT vec_id, v, band, CASE band WHEN 0 THEN k0 ELSE k1 END AS key
   FROM keys CROSS JOIN (SELECT unnest([0, 1]) AS band)),
 cand AS (
-  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b,
-         FIRST(a.v) AS va, FIRST(b.v) AS vb
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.key = b.key AND a.vec_id < b.vec_id
-  GROUP BY a.vec_id, b.vec_id),
-pairs AS (
+  SELECT p.vec_a, p.vec_b, ea.v AS va, eb.v AS vb FROM (
+    SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
+    FROM bands a JOIN bands b
+      ON a.band = b.band AND a.key = b.key AND a.vec_id < b.vec_id) p
+  JOIN e ea ON ea.vec_id = p.vec_a JOIN e eb ON eb.vec_id = p.vec_b),
+pairs AS MATERIALIZED (
   SELECT vec_a, vec_b FROM (
     SELECT vec_a, vec_b,
            list_dot_product(va, vb)
@@ -1429,14 +1268,9 @@ def q_dedup_materialize(spark, sf_dir) -> DataFrame:
     shape: the drop set is ≤ the pair-involved ids (tiny vs the corpus),
     so the corpus passes through ONE left-anti hash join — AQE broadcasts
     the drop side — and never shuffles or scans pairwise."""
-    from searchengine_spark.plans import ann, graph
+    from searchengine_spark.plans import graph
 
-    pairs = ann.lsh_neardup_pairs(
-        _embeddings(spark, sf_dir),
-        planes=_planes(),
-        bands=[[0, 1], [2, 3]],
-        threshold=0.4,
-    )
+    pairs = _embedding_neardup(spark, sf_dir)
     clusters = graph.dedup_clusters(pairs)
     corpus = _documents(spark, sf_dir).select("doc_id", "n_chars")
     return graph.drop_duplicates_by_cluster(corpus, clusters).orderBy(

@@ -2,7 +2,7 @@
 near-duplicate deduplication.
 
 Pairwise near-dup detection (MinHash-LSH, SimHash, embedding-cosine —
-plans/entry_queries.py, plans/ann.py) yields candidate PAIRS; an actual
+plans/dedup.py) yields candidate PAIRS; an actual
 dedup pass needs CLUSTERS: the transitive closure of the pair relation,
 with one canonical survivor per cluster (conventionally the minimum id).
 The reference engine never needs this (its corpus fits one pickle and

@@ -142,6 +142,14 @@ def test_neardup_pairs_threshold_and_bands(spark):
     assert not any(2 in p for p in pairs)
 
 
+def test_neardup_pairs_reject_unknown_plane(spark):
+    df = spark.createDataFrame([(0, [1.0] * DIM)], "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="outside"):
+        ann.lsh_neardup_pairs(
+            df, ann.make_hyperplanes(DIM, 4), bands=[[0, 4]], threshold=0.9
+        )
+
+
 def test_entry_constants_match_api_generator():
     from searchengine_spark.plans.entry_queries import EMB_DIM, HYPERPLANES, N_PLANES
 

@@ -288,8 +288,10 @@ def test_extract_anchor_texts_cases(case):
 
 def test_anchor_texts_resolution_matches_extract_links():
     # every anchor target must resolve exactly like F5 extract_links
-    # (shared _resolve_href); links without well-formed close tags are the
-    # only legal difference
+    # (shared _resolve_href); the legal differences are best-effort gaps of
+    # the anchor regex: links without well-formed close tags, and nested
+    # or overlapping anchors (the non-greedy match pairs an open tag with
+    # the nearest close tag, so an inner <a> is swallowed as text)
     html = (
         '<a href="/a">one</a> <a href="https://x.org/b?k=v#f">two</a> '
         '<a href="rel/c">three</a>'
@@ -389,3 +391,28 @@ def test_cli_linkrank(spark, tmp_path):
         "dst_url", "term", "n_occurrences", "n_anchors"
     }
     assert anchors.count() > 0
+
+
+def test_cli_linkrank_bucket_table_is_per_run(spark, tmp_path, monkeypatch):
+    """Two linkrank runs pass different bucket-table names, each one
+    graph.pagerank accepts, so concurrent runs sharing a metastore never
+    clobber each other's edge table."""
+    from searchengine_spark import cli
+    from searchengine_spark.plans import graph
+
+    pages_dir = tmp_path / "pages"
+    webgen.generate_spark(spark, 20, partitions=1).write.parquet(str(pages_dir))
+    real, names = graph.pagerank, []
+
+    def capture(*args, bucket_table=None, **kw):
+        names.append(bucket_table)
+        return real(*args, bucket_table=bucket_table, **kw)
+
+    monkeypatch.setattr(graph, "pagerank", capture)
+    for run in range(2):
+        assert cli.main([
+            "linkrank", "--input", str(pages_dir), "--out",
+            str(tmp_path / f"lr{run}"), "--iterations", "1",
+        ]) == 0
+    assert len(names) == 2 and names[0] != names[1]
+    assert all(n.startswith("_cli_linkrank_edges_") for n in names)

@@ -15,12 +15,16 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from searchengine_spark.plans.dedup import (
+    banded_candidate_pairs,
+    jaccard_verify_pairs,
+    simhash_neardup_pairs,
+)
 from searchengine_spark.plans.entry_queries import (
     PII_PATTERNS,
     decontaminate_against,
     distinct_trigrams,
     pii_scrub,
-    simhash_neardup_pairs,
 )
 
 
@@ -191,6 +195,38 @@ def test_simhash_banded_pairs_are_exact_vs_bruteforce(spark):
     assert got == want
 
 
+@pytest.mark.parametrize("n_bands", [3, 4])
+def test_banded_candidate_pairs_match_bruteforce(spark, n_bands):
+    """The shared banded join over random small-integer band keys (many
+    ids collide on several bands) equals the brute-force pair set: every
+    a < b sharing >= 1 band key, n_bands = the number of agreeing bands,
+    no self-pairs, and ``carry`` returns each side's own payload."""
+    import itertools
+    import random
+
+    rng = random.Random(29 + n_bands)
+    rows = [(i, [rng.randint(0, 4) for _ in range(n_bands)]) for i in range(100)]
+    df = spark.createDataFrame(
+        [(i, *ks, i * 7) for i, ks in rows],
+        ", ".join(["id long", *[f"k{b} int" for b in range(n_bands)], "p long"]),
+    )
+    got = {
+        (r["a"], r["b"]): (r["n_bands"], r["p_a"], r["p_b"])
+        for r in banded_candidate_pairs(
+            df, "id", [f"k{b}" for b in range(n_bands)], ("a", "b"), carry="p"
+        ).collect()
+    }
+    keys = dict(rows)
+    want = {}
+    for a, b in itertools.combinations(sorted(keys), 2):
+        agree = sum(x == y for x, y in zip(keys[a], keys[b]))
+        if agree:
+            want[(a, b)] = (agree, a * 7, b * 7)
+    assert any(n > 1 for n, _, _ in want.values()), "no multi-band collisions"
+    assert all(a < b for a, b in got)
+    assert got == want
+
+
 def test_simhash_banded_pairs_pigeonhole_guard(spark):
     df = spark.createDataFrame([(0, 1)], "doc_id long, simhash long")
     with pytest.raises(ValueError, match="pigeonhole"):
@@ -203,8 +239,6 @@ def test_jaccard_verify_kills_band_collision_false_positives(spark):
     """Stage-2 exact verification must (a) confirm true near-dups, (b) kill
     candidate pairs that only collided on a band, (c) carry the pair's
     extra columns through, and (d) survive empty element sets."""
-    from searchengine_spark.plans.entry_queries import jaccard_verify_pairs
-
     elems = spark.createDataFrame(
         [
             (1, ["a", "b", "c", "d"]),
@@ -314,8 +348,6 @@ def test_quality_flags_null_text_fails_all_rules_on_both_engines(spark, tmp_path
 def test_jaccard_verify_missing_element_row_fails_loudly(spark):
     """A pair id absent from elems must raise at execution, not silently
     vanish (an unjudged near-dup candidate must never read as clean)."""
-    from searchengine_spark.plans.entry_queries import jaccard_verify_pairs
-
     elems = spark.createDataFrame(
         [(1, ["a", "b"])], "doc_id long, terms array<string>"
     )
