@@ -112,8 +112,7 @@ def run_bench(cpus: int = CPUS, n_docs: int = N_DOCS, sf_dir: str = SF_DIR) -> d
     # (shards.export_and_write_index): tokenize once, derive every other
     # layout by vectorized block decode — never re-tokenize. Feeds the
     # exhaustive BM25 engine (rank-identity asserted below vs WAND) and the
-    # DuckDB-checkable entry queries. The from-scratch logical build
-    # (index_build.build_and_write_index) stays covered by tests.
+    # DuckDB-checkable entry queries.
     t0 = time.time()
     tables = shards_mod.export_and_write_index(
         spark, sharded, index_path, postings_partitions=max(cpus, 8)

@@ -14,15 +14,18 @@ Locally the same module runs as ``python -m searchengine_spark.cli ...``
 (Spark local mode). Subcommands mirror the reference's scripts:
 ``generate`` (test corpus), ``ingest-warc`` (Common-Crawl containers →
 pages table; also ``build --input-format warc`` to index straight from
-containers), ``build`` (= build_index.py), ``optimize``
-(= optimize_index.py → sharded compressed blocks), ``query`` (= app.py
-search path), ``merge`` (segment merge), ``verify`` (= verify_index.py).
+containers), ``build`` (= build_index.py + optimize_index.py: the one
+build, which writes the compressed sharded index), ``export`` (sharded →
+logical tables), ``query`` (= app.py search path; WAND over a sharded
+index, exhaustive BM25 over exported or merged logical tables), ``merge``
+(logical segment merge), ``verify`` (= verify_index.py).
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 import uuid
@@ -65,7 +68,7 @@ def cmd_ingest_warc(args) -> int:
 
 
 def _read_pages(spark, args):
-    """build/optimize input: parquet pages table, or WARC containers read
+    """build/linkrank input: parquet pages table, or WARC containers read
     directly (no intermediate table — the 100 TB path skips one full
     corpus write+read)."""
     if getattr(args, "input_format", "parquet") == "warc":
@@ -76,58 +79,26 @@ def _read_pages(spark, args):
 
 
 def cmd_build(args) -> int:
-    from searchengine_spark.operators import checkpoint, index_build
+    from searchengine_spark.operators import shards
 
     spark = _spark(args)
     pages = _read_pages(spark, args)
     t0 = time.time()
-    if args.sharded:
-        from searchengine_spark.operators import shards
-
-        ix = shards.build_and_write_sharded(
-            spark, pages, args.out, n_shards=args.shards,
-            resumable=args.resumable, n_chunks=args.n_chunks,
-            with_positions=args.positions,
-        )
-        wall = time.time() - t0
-        print(json.dumps({"docs": ix.n_docs, "n_shards": ix.n_shards,
-                          "wall_s": round(wall, 2),
-                          "docs_per_sec": round(ix.n_docs / wall, 1)}))
-        return 0
-    if args.resumable:
-        tokenized = checkpoint.checkpointed_tokenize(
-            spark, pages, args.out, n_chunks=args.n_chunks
-        )
-        tables = index_build.build_index_tables(tokenized)
-        index_build.write_index(tables, args.out, args.partitions)
-    else:
-        index_build.build_and_write_index(
-            spark, pages, args.out, postings_partitions=args.partitions
-        )
-    n = spark.read.parquet(f"{args.out}/stats").collect()[0]["n_docs"]
-    wall = time.time() - t0
-    print(json.dumps({"docs": n, "wall_s": round(wall, 2),
-                      "docs_per_sec": round(n / wall, 1)}))
-    return 0
-
-
-def cmd_optimize(args) -> int:
-    from searchengine_spark.operators import index_build, shards
-
-    spark = _spark(args)
-    tables = index_build.read_index(spark, args.index)
-    sharded = shards.build_sharded_index(
-        spark, tables, n_shards=args.shards, block_size=args.block_size
+    ix = shards.build_and_write_sharded(
+        spark, pages, args.out, n_shards=args.shards,
+        resumable=args.resumable, n_chunks=args.n_chunks,
+        with_positions=args.positions,
     )
-    shards.write_sharded_index(sharded, args.out)
-    print(json.dumps({"n_shards": sharded.n_shards, "n_docs": sharded.n_docs,
-                      "path": args.out}))
+    wall = time.time() - t0
+    print(json.dumps({"docs": ix.n_docs, "n_shards": ix.n_shards,
+                      "wall_s": round(wall, 2),
+                      "docs_per_sec": round(ix.n_docs / wall, 1)}))
     return 0
 
 
 def cmd_export(args) -> int:
-    """Inverse of ``optimize``: compressed sharded index → logical tables
-    (vectorized block decode; never re-tokenizes)."""
+    """Compressed sharded index → logical tables (vectorized block decode;
+    never re-tokenizes)."""
     from searchengine_spark.operators import shards
 
     spark = _spark(args)
@@ -141,13 +112,16 @@ def cmd_export(args) -> int:
 
 
 def cmd_query(args) -> int:
+    """The engine follows what is on disk: WAND over a sharded index
+    (``meta.json`` present), exhaustive BM25 over logical tables
+    (``export``/``merge`` outputs)."""
     from searchengine_spark.operators import index_build, shards
     from searchengine_spark.plans.bm25 import BM25SearchEngine
     from searchengine_spark.plans.wand import WandSearchEngine
 
     spark = _spark(args)
     batch = list(enumerate(args.query))
-    if args.wand:
+    if os.path.exists(os.path.join(args.index, "meta.json")):
         engine = WandSearchEngine(spark, shards.read_sharded_index(spark, args.index))
     else:
         engine = BM25SearchEngine(spark, index_build.read_index(spark, args.index))
@@ -261,21 +235,28 @@ def cmd_linkrank(args) -> int:
 
 
 def cmd_verify(args) -> int:
-    """Index-artifact integrity (reference verify_index.py:23-89 analog)."""
-    from searchengine_spark.operators import index_build
+    """Sharded-index integrity (reference verify_index.py:23-89 analog):
+    ``meta.json`` n_docs == docs_sharded rows, blocks non-empty, and
+    Σ n over posting blocks == Σ df in term_stats."""
+    from pyspark.sql import functions as F
+
+    from searchengine_spark.operators import shards
 
     spark = _spark(args)
-    checks = {}
-    tables = index_build.read_index(spark, args.index)
-    stats = tables.stats.collect()[0]
-    checks["n_docs"] = int(stats["n_docs"])
-    checks["avgdl"] = float(stats["avgdl"])
-    checks["docs_rows"] = tables.docs.count()
-    checks["postings_rows"] = tables.postings.count()
-    checks["terms"] = tables.term_stats.count()
-    checks["doc_stats_match"] = tables.doc_stats.count() == checks["n_docs"]
-    checks["docs_match"] = checks["docs_rows"] == checks["n_docs"]
-    ok = checks["doc_stats_match"] and checks["docs_match"] and checks["postings_rows"] > 0
+    index = shards.read_sharded_index(spark, args.index)
+    postings = index.blocks.filter(~F.col("term").startswith("\x00"))
+    checks = {
+        "n_docs": index.n_docs,
+        "docs_rows": index.docs.count(),
+        "block_rows": index.blocks.count(),
+        "postings": int(postings.agg(F.sum("n")).collect()[0][0] or 0),
+        "sum_df": int(index.term_stats.agg(F.sum("df")).collect()[0][0] or 0),
+    }
+    ok = (
+        checks["docs_rows"] == checks["n_docs"]
+        and checks["block_rows"] > 0
+        and checks["postings"] == checks["sum_df"]
+    )
     print(json.dumps({"ok": ok, **checks}))
     return 0 if ok else 1
 
@@ -299,27 +280,17 @@ def main(argv: list[str] | None = None) -> int:
                     help="skip T2 extraction (text column NULL; a downstream stage owns it)")
     iw.set_defaults(fn=cmd_ingest_warc)
 
-    b = sub.add_parser("build", help="build + persist the inverted index")
+    b = sub.add_parser("build", help="build + persist the compressed sharded index")
     b.add_argument("--input", required=True)
     b.add_argument("--input-format", choices=["parquet", "warc"], default="parquet",
                    help="read --input as a pages parquet table or as WARC containers directly")
     b.add_argument("--out", required=True)
-    b.add_argument("--partitions", type=int, default=32)
     b.add_argument("--resumable", action="store_true")
     b.add_argument("--n-chunks", type=int, default=16)
     b.add_argument("--positions", action="store_true",
-                   help="store token positions in posting blocks (phrase queries); sharded only")
-    b.add_argument("--sharded", action="store_true",
-                   help="one-pass compressed sharded build (production path)")
+                   help="store token positions in posting blocks (phrase queries)")
     b.add_argument("--shards", type=int, default=None, help="explicit shard count (default: docs-per-shard policy)")
     b.set_defaults(fn=cmd_build)
-
-    o = sub.add_parser("optimize", help="logical index → sharded compressed blocks")
-    o.add_argument("--index", required=True)
-    o.add_argument("--out", required=True)
-    o.add_argument("--shards", type=int, default=None, help="explicit shard count (default: docs-per-shard policy)")
-    o.add_argument("--block-size", type=int, default=128)
-    o.set_defaults(fn=cmd_optimize)
 
     e = sub.add_parser("export", help="sharded compressed index → logical tables")
     e.add_argument("--index", required=True)
@@ -327,10 +298,11 @@ def main(argv: list[str] | None = None) -> int:
     e.add_argument("--partitions", type=int, default=32)
     e.set_defaults(fn=cmd_export)
 
-    q = sub.add_parser("query", help="BM25 top-k (exhaustive or --wand)")
+    q = sub.add_parser(
+        "query", help="BM25 top-k (WAND over a sharded index, exhaustive over logical tables)"
+    )
     q.add_argument("--index", required=True)
     q.add_argument("--top-k", type=int, default=10)
-    q.add_argument("--wand", action="store_true")
     q.add_argument("query", nargs="+")
     q.set_defaults(fn=cmd_query)
 
@@ -370,7 +342,7 @@ def main(argv: list[str] | None = None) -> int:
                     help="weight edges by link multiplicity (weighted PageRank)")
     lr.set_defaults(fn=cmd_linkrank)
 
-    v = sub.add_parser("verify", help="index artifact integrity check")
+    v = sub.add_parser("verify", help="sharded index integrity check")
     v.add_argument("--index", required=True)
     v.set_defaults(fn=cmd_verify)
 

@@ -14,26 +14,22 @@ content string is dropped here (only the 200-char snippet survives), which
 bounds row width no matter how large the page is. This stage is
 embarrassingly parallel, and is the checkpoint/resume granularity.
 
-**Stage 2 — aggregate** (``build_index_tables``): all-native Catalyst ops.
-The per-doc weighted tf map (A1, indexer.py:92-107) aggregates only within
-one document, so stage 1 computes it map-side; stage 2 is a pure explode
-(no (doc,term) shuffle exists anywhere). The only shuffles in the build
-are the final repartition-by-term for the sorted posting layout and the
-per-term df aggregation; Zipf head-term skew in the posting *blocks*
-(operators/shards.py) is handled by doc-range sharding.
+**Stage 2 — aggregate** (``build_index_tables``): all-native Catalyst ops
+over the tokenized frame → the logical ``IndexTables``. The per-doc
+weighted tf map (A1, indexer.py:92-107) aggregates only within one
+document, so stage 1 computes it map-side; stage 2 is a pure explode (no
+(doc,term) shuffle exists anywhere) plus the per-term df aggregation.
 
-``build_and_write_index`` materializes stage 1 to parquet before the five
-table writes so extraction runs exactly once (and resume can pick up from
-the materialized stage).
-
-Scale notes (100 TB / 10^12 docs): stage 1 is a map-only scan (no shuffle);
-stage 2 shuffles the postings once (the hash-bucket layout exchange) and
-aggregates once by term for term_stats; postings land in POSTING_BUCKETS
-hash directories so query-time term lookups prune whole directories —
-the distributed analog of the reference's dict lookup (indexer.py:384-394).
-For the production build prefer operators/shards.build_and_write_sharded,
-which skips this raw postings table entirely (posting rows live only
-inside its single shuffle) and emits the compressed block index.
+There is one persisted build: ``shards.build_and_write_sharded`` runs
+stage 1 and then encodes the compressed sharded index straight from the
+tokenized frame — posting rows live only inside its single shuffle. The
+logical tables here are the in-memory spec the exhaustive
+``BM25SearchEngine`` scores over and the tests check that build against;
+``shards.export_index`` derives them from a written sharded index, and
+:func:`write_index` persists them (export, segment merge, streaming
+segments) in ``POSTING_BUCKETS`` hash directories so query-time term
+lookups prune whole directories — the distributed analog of the
+reference's dict lookup (indexer.py:384-394).
 """
 
 from __future__ import annotations
@@ -379,72 +375,12 @@ def extract_documents(pages: DataFrame, use_precomputed_text: bool = True) -> Da
     )
 
 
-def tokenize_extracted_documents(
-    documents: DataFrame, stopwords: frozenset[str] = DEFAULT_STOPWORDS
-) -> DataFrame:
-    """:func:`extract_documents` output → the stage-1 tokenized shape.
-
-    Same field-boosted tf semantics as :func:`tokenize_documents`, minus the
-    HTML extraction (already done). Lets callers split extraction from
-    tokenization — e.g. to persist the extracted fields as their own table."""
-    stop = stopwords
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            snippets = [textproc.make_snippet(c or "") for c in pdf["content"]]
-            sigs = fieldsig.sig_words_batch(
-                pdf["title"].tolist(), pdf["meta_description"].tolist(), snippets
-            ).astype("int64")
-            rows = []
-            for i, (doc_id, url, title, meta, content) in enumerate(
-                zip(
-                    pdf["doc_id"],
-                    pdf["url"],
-                    pdf["title"],
-                    pdf["meta_description"],
-                    pdf["content"],
-                )
-            ):
-                tt = textproc.tokenize_filtered(title or "", stop)
-                mt = textproc.tokenize_filtered(meta or "", stop)
-                ct = textproc.tokenize_filtered(content or "", stop)
-                tf, n_toks = _tf_only(
-                    [(tt, TITLE_BOOST), (mt, META_BOOST), (ct, CONTENT_WEIGHT)]
-                )
-                rows.append(
-                    (
-                        doc_id,
-                        url,
-                        title or "",
-                        meta or "",
-                        snippets[i],
-                        list(tf.items()),
-                        n_toks,
-                        TITLE_BOOST * len(tt)
-                        + META_BOOST * len(mt)
-                        + CONTENT_WEIGHT * len(ct),
-                        sigs[i].tolist(),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in TOKENIZED_SCHEMA.fields])
-
-    return documents.mapInPandas(process, TOKENIZED_SCHEMA)
-
-
-def build_index(documents_or_pages: DataFrame) -> IndexTables:
-    """Build the logical index directly from a web_pages frame (detects the
-    input shape). Prefer :func:`build_and_write_index` for persisted builds —
-    it materializes stage 1 so extraction runs once across the five writes."""
-    cols = set(documents_or_pages.columns)
-    if {"html", "url"} <= cols:
-        tokenized = tokenize_documents(documents_or_pages)
-    elif {"tf_terms", "doc_len"} <= cols:
-        tokenized = documents_or_pages
-    elif {"doc_id", "title", "meta_description", "content"} <= cols:
-        tokenized = tokenize_extracted_documents(documents_or_pages)
-    else:
-        raise ValueError(f"unrecognized input columns: {sorted(cols)}")
-    return build_index_tables(tokenized)
+def build_index(pages: DataFrame) -> IndexTables:
+    """The in-memory logical index of a web_pages frame: the spec
+    ``BM25SearchEngine`` scores over and the tests check the sharded
+    build against. Persisted indexes come from
+    :func:`~searchengine_spark.operators.shards.build_and_write_sharded`."""
+    return build_index_tables(tokenize_documents(pages))
 
 
 def write_index(tables: IndexTables, path: str, postings_partitions: int = 32) -> None:
@@ -465,74 +401,6 @@ def write_index(tables: IndexTables, path: str, postings_partitions: int = 32) -
         "term"
     ).write.mode("overwrite").parquet(f"{path}/term_stats")
     tables.stats.write.mode("overwrite").parquet(f"{path}/stats")
-
-
-def build_and_write_index(
-    spark: SparkSession,
-    pages: DataFrame,
-    path: str,
-    postings_partitions: int = 32,
-    use_precomputed_text: bool = True,
-) -> IndexTables:
-    """Full persisted build: materialize stage 1 once, then derive tables.
-
-    The ``tokenized`` intermediate is itself a table (kept at
-    ``{path}/tokenized``) — it is the resume point for checkpointed builds
-    (operators/checkpoint.py) and the input to posting-block compaction.
-
-    Each expensive computation runs exactly once: the tf aggregation (the
-    big shuffle) feeds the postings write, and term_stats/stats derive
-    from the *written* postings/doc_stats parquet (cheap column scans)
-    instead of re-running the aggregation — at 100 TB the tf agg is hours,
-    so recomputing it per output table is not an option.
-    """
-    tokenize_documents(pages, use_precomputed_text=use_precomputed_text).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/tokenized")
-    tokenized = spark.read.parquet(f"{path}/tokenized")
-
-    tokenized.select(
-        "doc_id", "url", "title", "description", "content_snippet"
-    ).write.mode("overwrite").parquet(f"{path}/docs")
-    tokenized.select("doc_id", "doc_len").write.mode("overwrite").parquet(
-        f"{path}/doc_stats"
-    )
-    doc_stats = spark.read.parquet(f"{path}/doc_stats")
-    doc_stats.agg(
-        F.count("*").alias("n_docs"),
-        F.avg("doc_len").alias("avgdl"),
-        F.sum("doc_len").cast("long").alias("sum_doc_len"),
-    ).write.mode("overwrite").parquet(f"{path}/stats")
-
-    (
-        term_frequencies(tokenized)
-        .select("term", "doc_id", "tf", "doc_len")
-        .withColumn("bucket", term_bucket_col(F.col("term")))
-        .repartition(postings_partitions, "bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{path}/postings")
-    )
-    postings = spark.read.parquet(f"{path}/postings")
-    stats = spark.read.parquet(f"{path}/stats")
-    (
-        postings.groupBy("term")
-        .agg(F.count("*").alias("df"))
-        .crossJoin(F.broadcast(stats.select("n_docs")))
-        .select(
-            "term",
-            "df",
-            F.greatest(
-                F.lit(0.0),
-                F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-            ).alias("idf"),
-        )
-        .repartition(max(1, postings_partitions // 4), "term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .parquet(f"{path}/term_stats")
-    )
-    return read_index(spark, path)
 
 
 def read_index(spark: SparkSession, path: str) -> IndexTables:

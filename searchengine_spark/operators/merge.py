@@ -27,7 +27,6 @@ Property-tested: merge(A,B,C) ≡ merge(merge(A,B),C) ≡ build-from-union
 
 from __future__ import annotations
 
-import math
 from functools import reduce
 
 import numpy as np
@@ -247,7 +246,7 @@ def apply_tombstones(
     materialization (fine for tests, double work at scale).
     """
     from searchengine_spark.functions import fieldsig
-    from searchengine_spark.operators.shards import ShardedIndex, read_sharded_index
+    from searchengine_spark.operators.shards import ShardedIndex
 
     if block_size is None:
         block_size = index.block_size
@@ -446,69 +445,21 @@ def apply_tombstones(
         )
     )
 
-    def term_stats_from(blocks_df: DataFrame) -> DataFrame:
-        return (
-            blocks_df.filter(~F.col("term").startswith("\x00"))
-            .groupBy("term")
-            .agg(F.sum("n").cast("long").alias("df"))
-            .select(
-                "term",
-                "df",
-                F.greatest(
-                    F.lit(0.0),
-                    F.log(
-                        (F.lit(float(n_docs2)) - F.col("df") + 0.5)
-                        / (F.col("df") + 0.5)
-                    ),
-                ).alias("idf"),
-            )
-        )
-
+    compacted = ShardedIndex(
+        blocks=blocks2,
+        docs=docs2,
+        term_stats=shards_mod.term_stats_from_blocks(blocks2, n_docs2),
+        n_docs=n_docs2,
+        avgdl=avgdl2,
+        sum_doc_len=sum_dl2,
+        n_shards=index.n_shards,
+        shard_size=index.shard_size,
+        block_size=block_size,
+        with_positions=with_positions,
+        has_flag_stream=index.has_flag_stream,
+    )
     if out_path is None:
-        return ShardedIndex(
-            blocks=blocks2,
-            docs=docs2,
-            term_stats=term_stats_from(blocks2),
-            n_docs=n_docs2,
-            avgdl=avgdl2,
-            sum_doc_len=sum_dl2,
-            n_shards=index.n_shards,
-            shard_size=index.shard_size,
-            block_size=block_size,
-            with_positions=with_positions,
-            has_flag_stream=index.has_flag_stream,
-        )
-
+        return compacted
     # write path: the expensive rewrite runs exactly once (blocks write);
-    # term_stats derive from the WRITTEN parquet, mirroring the build
-    import json as _json
-
-    (
-        blocks2.repartition(index.n_shards, "shard")
-        .sortWithinPartitions("shard", "term", "block_no")
-        .write.mode("overwrite")
-        .parquet(f"{out_path}/blocks")
-    )
-    (
-        docs2.repartition(index.n_shards, "shard")
-        .sortWithinPartitions("shard", "docno")
-        .write.mode("overwrite")
-        .parquet(f"{out_path}/docs_sharded")
-    )
-    term_stats_from(spark.read.parquet(f"{out_path}/blocks")).write.mode(
-        "overwrite"
-    ).parquet(f"{out_path}/term_stats")
-    with open(f"{out_path}/meta.json", "w") as f:
-        _json.dump(
-            {
-                "n_docs": n_docs2,
-                "avgdl": avgdl2,
-                "sum_doc_len": sum_dl2,
-                "n_shards": index.n_shards,
-                "shard_size": index.shard_size,
-                "block_size": block_size,
-                "with_positions": with_positions,
-            },
-            f,
-        )
-    return read_sharded_index(spark, out_path)
+    # term_stats derive from the WRITTEN parquet, as in the build
+    return shards_mod.write_sharded_index(compacted, out_path)

@@ -40,7 +40,6 @@ from __future__ import annotations
 
 import json
 import math
-import os
 from dataclasses import dataclass
 from typing import Iterator
 
@@ -56,7 +55,6 @@ from searchengine_spark.config import (
     TITLE_BOOST,
 )
 from searchengine_spark.operators import codec
-from searchengine_spark.operators.index_build import IndexTables
 
 
 def _assert_integral_boosts() -> None:
@@ -115,12 +113,10 @@ def derive_n_shards(n_docs: int) -> int:
     return max(1, math.ceil(n_docs / DEFAULT_DOCS_PER_SHARD))
 
 # Explicit broadcast hints are gated on estimated BYTES, not bare row count:
-# the lowered title/desc/snippet dimension is ~350 B/row and the
-# (doc_id, docno) mapping ~50 B/row, so these caps keep a forced broadcast
-# under ~70 MB / ~200 MB on every executor; past them the keyed join is left
+# the (doc_id, docno) mapping is ~50 B/row, so this cap keeps a forced
+# broadcast under ~200 MB on every executor; past it the keyed join is left
 # to AQE, which shrinks it back to a broadcast at runtime when the actual
 # build-side bytes allow.
-BROADCAST_LOWERED_MAX_ROWS = 200_000   # ~350 B/row ⇒ ≤ ~70 MB
 BROADCAST_DOCNOS_MAX_ROWS = 4_000_000  # ~50 B/row ⇒ ≤ ~200 MB
 
 _BLOCK_COLS = [
@@ -467,137 +463,6 @@ def fieldsig_block_rows(sig_src: DataFrame, with_positions: bool = False) -> Dat
     return src.groupBy("shard").applyInPandas(build, schema)
 
 
-def build_sharded_index(
-    spark: SparkSession,
-    tables: IndexTables,
-    n_shards: int | None = None,
-    block_size: int = DEFAULT_BLOCK_SIZE,
-    docnos: DataFrame | None = None,
-    shard_size: int | None = None,
-    avgdl: float | None = None,
-) -> ShardedIndex:
-    """Logical index tables → sharded block-compressed physical index.
-
-    ``n_shards=None`` derives the count from the docs-per-shard policy
-    (:func:`derive_n_shards`), so shard task size stays constant as the
-    corpus grows; pass an explicit count to override.
-
-    ``shard_size``/``avgdl`` overrides let a *segment* build share the
-    global docno→shard mapping and corpus avgdl (operators/merge.py): a
-    segment's own n_docs/avgdl must not leak into block layout or
-    block-max metadata, or merged segments would disagree.
-    """
-    stats = tables.stats.collect()[0]
-    n_docs = int(stats["n_docs"])
-    # exact corpus Σdoc_len (tombstone masking's bit-exact avgdl' input) —
-    # only trustworthy when avgdl derives from these same tables; a segment
-    # build overriding avgdl carries CORPUS avgdl but segment-local stats,
-    # so its sum would be the segment's, not the corpus's
-    sum_doc_len = None
-    if avgdl is None and "sum_doc_len" in stats.__fields__:
-        sum_doc_len = (
-            int(stats["sum_doc_len"]) if stats["sum_doc_len"] is not None else None
-        )
-    if avgdl is None:
-        avgdl = float(stats["avgdl"])
-    if n_shards is None:
-        n_shards = derive_n_shards(n_docs)
-    if shard_size is None:
-        shard_size = max(1, math.ceil(n_docs / n_shards))
-
-    owns_docnos = docnos is None
-    if docnos is None:
-        docnos = assign_docnos(spark, tables.doc_stats.select("doc_id"))
-
-    # tf/doc_len are integral under integral field boosts (validated above
-    # the cast by _assert_integral_boosts; the kernel's own integrality
-    # check cannot fire on this path because the cast truncates first) —
-    # ship them through the posting shuffle as int32, not double: 8 fewer
-    # bytes on every one of the ~177 posting rows per doc, the build's
-    # single big exchange. int32 doc_len bounds a single doc at 2^31
-    # weighted tokens (~8 GiB of text), far beyond any real page.
-    _assert_integral_boosts()
-    # boost-bound flags need the doc's lowered metadata next to each posting;
-    # broadcast the (doc_id, 3 lowered fields) dimension when its BYTES stay
-    # broadcast-safe, else let AQE plan the doc_id-keyed join
-    fl_src = tables.docs.select("doc_id", *_lowered_fields())
-    if n_docs <= BROADCAST_LOWERED_MAX_ROWS:
-        fl_src = F.broadcast(fl_src)
-    with_no = (
-        tables.postings.join(docnos, "doc_id")
-        .join(fl_src, "doc_id")
-        .select(
-            (F.col("docno") / shard_size).cast("int").alias("shard"),
-            "term",
-            "docno",
-            F.col("tf").cast("int").alias("tf"),
-            F.col("doc_len").cast("int").alias("doc_len"),
-            _boost_flags_col(
-                F.col("_lt"), F.col("_ld"), F.col("_lc"), F.col("term")
-            ).alias("flags"),
-        )
-    )
-
-    def encode_part(pdf: pd.DataFrame) -> pd.DataFrame:
-        return encode_blocks_pdf(pdf, avgdl, block_size)
-
-    # Group granularity: (shard, term-bucket), NOT (shard, term). One Arrow
-    # group per term would mean |vocab|·n_shards tiny groups — pure
-    # per-group overhead. A bucket carries ~1/TERM_BUCKETS of a shard's
-    # postings (bounded memory); the per-term split happens inside the
-    # kernel via pandas groupby (C-level). Head-term skew is already
-    # neutralized by doc-sharding, so buckets are near-uniform.
-    blocks = with_no.withColumn(
-        "_tb", F.pmod(F.xxhash64("term"), F.lit(TERM_BUCKETS))
-    ).groupBy("shard", "_tb").applyInPandas(
-        lambda pdf: encode_part(pdf.drop(columns=["_tb"])), BLOCK_SCHEMA
-    )
-
-    docs = (
-        tables.docs.join(docnos, "doc_id")
-        .join(tables.doc_stats.select("doc_id", "doc_len"), "doc_id")
-        .select(
-            (F.col("docno") / shard_size).cast("int").alias("shard"),
-            "docno",
-            "doc_id",
-            "url",
-            "title",
-            "description",
-            "content_snippet",
-            "doc_len",
-        )
-    )
-
-    # field-signature sidecar rows ride with the blocks (co-partitioned by
-    # shard; see fieldsig_block_rows) — WAND's emission bounds read them
-    blocks = blocks.unionByName(
-        fieldsig_block_rows(
-            docs.select("shard", "docno", "title", "description", "content_snippet")
-        )
-    )
-
-    index = ShardedIndex(
-        blocks=blocks,
-        docs=docs,
-        term_stats=tables.term_stats,
-        n_docs=n_docs,
-        avgdl=avgdl,
-        n_shards=n_shards,
-        shard_size=shard_size,
-        block_size=block_size,
-        sum_doc_len=sum_doc_len,
-    )
-    # blocks/docs are still LAZY plans over docnos — the cache assign_docnos
-    # made must live until they are materialized. Ownership: only a docnos
-    # frame THIS call created is auto-released by write_sharded_index; a
-    # caller-supplied docnos (the segment/merge pattern — other segment
-    # plans may share it) stays the caller's to release.
-    index._docno_source = (  # type: ignore[attr-defined]
-        getattr(docnos, "_docno_source", None) if owns_docnos else None
-    )
-    return index
-
-
 def build_and_write_sharded(
     spark: SparkSession,
     pages: DataFrame,
@@ -609,13 +474,15 @@ def build_and_write_sharded(
     n_chunks: int = 16,
     with_positions: bool = False,
 ) -> ShardedIndex:
-    """One-pass production indexing pipeline: web_pages → compressed sharded
-    index, WITHOUT materializing the raw postings table.
+    """The indexing pipeline: web_pages → compressed sharded index, WITHOUT
+    materializing the raw postings table. It is the only build, and
+    :func:`shard_and_write_from_tokenized` is the only code that encodes
+    posting blocks from documents.
 
     The raw (term, doc_id, tf, doc_len) posting rows are ~10x the bytes of
     the encoded blocks (a 32-char hex doc_id on every posting); at 100 TB
-    writing them out just to re-read, re-shuffle and encode is the dominant
-    cost of the two-step build. Here posting rows exist only inside ONE
+    writing them out just to re-read, re-shuffle and encode would dominate
+    the build. Here posting rows exist only inside ONE
     shuffle (the groupBy(shard, term-bucket) exchange feeding the encode
     kernel):
 
@@ -708,6 +575,12 @@ def shard_and_write_from_tokenized(
         "shard", "docno", "doc_len", *_lowered_fields(),
         F.explode("tf_terms").alias("tw"),
     ).select(*posting_cols)
+    # Group granularity: (shard, term-bucket), NOT (shard, term). One Arrow
+    # group per term would mean |vocab|·n_shards tiny groups — pure
+    # per-group overhead. A bucket carries ~1/TERM_BUCKETS of a shard's
+    # postings (bounded memory); the per-term split happens inside the
+    # kernel. Head-term skew is already neutralized by doc-sharding, so
+    # buckets are near-uniform.
     encoded = (
         exploded.withColumn("_tb", F.pmod(F.xxhash64("term"), F.lit(TERM_BUCKETS)))
         .groupBy("shard", "_tb")
@@ -747,45 +620,19 @@ def shard_and_write_from_tokenized(
         .parquet(f"{path}/docs_sharded")
     )
 
-    blocks = spark.read.parquet(f"{path}/blocks")
-    (
-        # "\x00"-prefixed pseudo-terms (field-signature sidecar rows) are
-        # not postings — they must not surface as vocabulary terms
-        blocks.filter(~F.col("term").startswith("\x00"))
-        .groupBy("term")
-        .agg(F.sum("n").cast("long").alias("df"))
-        .select(
-            "term",
-            "df",
-            F.greatest(
-                F.lit(0.0),
-                F.log((F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-            ).alias("idf"),
-        )
-        .write.mode("overwrite")
-        .parquet(f"{path}/term_stats")
+    release_docnos(docnos_src)  # blocks+docs are written; the cache is dead weight
+    return _finish_write(
+        spark, path,
+        n_docs=n_docs, avgdl=avgdl, sum_doc_len=sum_doc_len, n_shards=n_shards,
+        shard_size=shard_size, block_size=block_size, with_positions=with_positions,
     )
 
-    release_docnos(docnos_src)  # blocks+docs are written; the cache is dead weight
-    with open(f"{path}/meta.json", "w") as f:
-        json.dump(
-            {
-                "n_docs": n_docs,
-                "avgdl": avgdl,
-                "sum_doc_len": sum_doc_len,
-                "n_shards": n_shards,
-                "shard_size": shard_size,
-                "block_size": block_size,
-                "with_positions": with_positions,
-            },
-            f,
-        )
-    return read_sharded_index(spark, path)
 
-
-def write_sharded_index(index: ShardedIndex, path: str) -> None:
-    """Persist: blocks/docs repartitioned by shard, term-sorted within files
-    so the query-time term IN-list prunes parquet row groups."""
+def write_sharded_index(index: ShardedIndex, path: str) -> ShardedIndex:
+    """Persist an in-memory index plan (e.g. a compaction rewrite):
+    blocks/docs repartitioned by shard, term-sorted within files so the
+    query-time term IN-list prunes parquet row groups. Returns the re-read
+    index."""
     (
         index.blocks.repartition(index.n_shards, "shard")
         .sortWithinPartitions("shard", "term", "block_no")
@@ -798,22 +645,45 @@ def write_sharded_index(index: ShardedIndex, path: str) -> None:
         .write.mode("overwrite")
         .parquet(f"{path}/docs_sharded")
     )
-    index.term_stats.write.mode("overwrite").parquet(f"{path}/term_stats")
-    # releases only a docnos cache build_sharded_index itself created
-    # (caller-supplied docnos may back other live segment plans)
-    release_docnos(index)
-    meta = {
-        "n_docs": index.n_docs,
-        "avgdl": index.avgdl,
-        "sum_doc_len": index.sum_doc_len,
-        "n_shards": index.n_shards,
-        "shard_size": index.shard_size,
-        "block_size": index.block_size,
-        "with_positions": index.with_positions,
-    }
-    os.makedirs(path, exist_ok=True)
+    return _finish_write(
+        index.blocks.sparkSession, path,
+        n_docs=index.n_docs, avgdl=index.avgdl, sum_doc_len=index.sum_doc_len,
+        n_shards=index.n_shards, shard_size=index.shard_size,
+        block_size=index.block_size, with_positions=index.with_positions,
+    )
+
+
+def _finish_write(spark: SparkSession, path: str, **meta) -> ShardedIndex:
+    """Last step of every sharded write, once ``blocks`` and
+    ``docs_sharded`` are on disk: derive term_stats from the WRITTEN blocks
+    (never re-running the plan that produced them), write ``meta.json``,
+    and return the re-read index."""
+    term_stats_from_blocks(
+        spark.read.parquet(f"{path}/blocks"), meta["n_docs"]
+    ).write.mode("overwrite").parquet(f"{path}/term_stats")
     with open(f"{path}/meta.json", "w") as f:
         json.dump(meta, f)
+    return read_sharded_index(spark, path)
+
+
+def term_stats_from_blocks(blocks: DataFrame, n_docs: int) -> DataFrame:
+    """(term, df, idf) from block metadata alone: Σ n per term == df, since
+    a doc holds at most one posting per term. "\x00"-prefixed pseudo-terms
+    (field-signature sidecar rows) are not postings — they must not surface
+    as vocabulary terms."""
+    return (
+        blocks.filter(~F.col("term").startswith("\x00"))
+        .groupBy("term")
+        .agg(F.sum("n").cast("long").alias("df"))
+        .select(
+            "term",
+            "df",
+            F.greatest(
+                F.lit(0.0),
+                F.log((F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)),
+            ).alias("idf"),
+        )
+    )
 
 
 def read_sharded_index(spark: SparkSession, path: str) -> ShardedIndex:
@@ -936,8 +806,8 @@ def term_skew_report(index: ShardedIndex, top_n: int = 20) -> DataFrame:
 
 
 def export_index(spark: SparkSession, index: ShardedIndex) -> "IndexTables":
-    """Inverse of :func:`build_sharded_index` (the CLI's ``optimize``):
-    compressed sharded blocks → the logical ``IndexTables`` layout.
+    """Compressed sharded blocks → the logical ``IndexTables`` layout (the
+    CLI's ``export``).
 
     Layout conversion never re-tokenizes. The blocks already carry every
     posting (term, docno, tf, doc_len) and ``docs_sharded`` carries doc

@@ -1949,19 +1949,28 @@ def q_bm25_merged_topk(spark, sf_dir) -> DataFrame:
 MASKED_DELETE_PRED = "CAST(doc_id AS BIGINT) % 2 = 0"
 
 
-def _sharded_index_and_dead_set(spark, sf_dir):
+def _stemmed_sharded_index(spark, sf_dir, name):
+    """The production sharded build over the Porter-stemmed text-only
+    corpus (the tokenizer build_text_only_index uses), written to the
+    row's own scratch dir — the index every stemmed WAND row queries."""
+    from searchengine_spark.operators import shards
+    from searchengine_spark.plans.text_only import tokenize_text_documents
+
+    return shards.shard_and_write_from_tokenized(
+        spark,
+        tokenize_text_documents(_documents(spark, sf_dir)),
+        _scratch_dir(sf_dir, name),
+        n_shards=8,
+    )
+
+
+def _sharded_index_and_dead_set(spark, sf_dir, name):
     """Shared setup for the two delete-path oracle rows (mask vs rewrite):
     one sharded compressed index over the text-only corpus plus the
     even-doc_id dead set (the SQL mirror of MASKED_DELETE_PRED).  Both
     rows MUST build from identical inputs — they share one DuckDB twin
     (SQL_WAND_MASKED_TOPK), so any drift here would desynchronize them."""
-    from searchengine_spark.operators import shards
-    from searchengine_spark.plans.text_only import build_text_only_index
-
-    tables = build_text_only_index(spark, _documents(spark, sf_dir))
-    for name in ("docs", "postings", "doc_stats", "term_stats", "stats"):
-        setattr(tables, name, getattr(tables, name).cache())
-    sharded = shards.build_sharded_index(spark, tables, n_shards=8)
+    sharded = _stemmed_sharded_index(spark, sf_dir, name)
     dead = (
         _documents(spark, sf_dir)
         .filter(F.col("doc_id") % 2 == 0)
@@ -1980,7 +1989,7 @@ def q_wand_masked_topk(spark, sf_dir) -> DataFrame:
     from searchengine_spark.operators import tombstones
     from searchengine_spark.plans.wand import WandSearchEngine
 
-    sharded, dead = _sharded_index_and_dead_set(spark, sf_dir)
+    sharded, dead = _sharded_index_and_dead_set(spark, sf_dir, "wand_masked_topk")
     mask = tombstones.build_mask(spark, sharded, dead)
     engine = WandSearchEngine(spark, sharded, mask=mask)
     res = engine.search_batch([(0, STEMMED_QUERY)], top_k=10, with_metadata=False)
@@ -2012,7 +2021,7 @@ def q_wand_compacted_topk(spark, sf_dir) -> DataFrame:
     from searchengine_spark.operators import merge
     from searchengine_spark.plans.wand import WandSearchEngine
 
-    sharded, dead = _sharded_index_and_dead_set(spark, sf_dir)
+    sharded, dead = _sharded_index_and_dead_set(spark, sf_dir, "wand_compacted_topk")
     compacted = merge.apply_tombstones(spark, sharded, dead)
     engine = WandSearchEngine(spark, compacted)
     res = engine.search_batch([(0, STEMMED_QUERY)], top_k=10, with_metadata=False)
@@ -2038,14 +2047,9 @@ def q_wand_stemmed_topk(spark, sf_dir) -> DataFrame:
     index + block-max WAND path (plans/wand.py); rank/score-identity of the
     two paths is property-tested in tests/test_wand.py, and the same
     stemmed-table DuckDB oracle checks both."""
-    from searchengine_spark.operators import shards
-    from searchengine_spark.plans.text_only import build_text_only_index
     from searchengine_spark.plans.wand import WandSearchEngine
 
-    tables = build_text_only_index(spark, _documents(spark, sf_dir))
-    for name in ("docs", "postings", "doc_stats", "term_stats", "stats"):
-        setattr(tables, name, getattr(tables, name).cache())
-    sharded = shards.build_sharded_index(spark, tables, n_shards=8)
+    sharded = _stemmed_sharded_index(spark, sf_dir, "wand_stemmed_topk")
     engine = WandSearchEngine(spark, sharded)
     res = engine.search_batch([(0, STEMMED_QUERY)], top_k=10, with_metadata=False)
     return res.select("rank", "doc_id", F.round("score", 6).alias("score"))
@@ -2059,14 +2063,9 @@ def q_wand_subsplit_topk(spark, sf_dir) -> DataFrame:
     under the driver's DuckDB hash gate regardless of the driver host's
     core count. Exact top-k must be unchanged: the twin is the SAME
     stemmed-table oracle as wand_stemmed_topk."""
-    from searchengine_spark.operators import shards
-    from searchengine_spark.plans.text_only import build_text_only_index
     from searchengine_spark.plans.wand import WandSearchEngine
 
-    tables = build_text_only_index(spark, _documents(spark, sf_dir))
-    for name in ("docs", "postings", "doc_stats", "term_stats", "stats"):
-        setattr(tables, name, getattr(tables, name).cache())
-    sharded = shards.build_sharded_index(spark, tables, n_shards=8)
+    sharded = _stemmed_sharded_index(spark, sf_dir, "wand_subsplit_topk")
     engine = WandSearchEngine(spark, sharded, sub_split=3)
     res = engine.search_batch([(0, STEMMED_QUERY)], top_k=10, with_metadata=False)
     return res.select("rank", "doc_id", F.round("score", 6).alias("score"))

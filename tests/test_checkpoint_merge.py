@@ -5,6 +5,7 @@ import math
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from searchengine_spark.operators import checkpoint, index_build, merge, shards
 from searchengine_spark.operators.checkpoint import SimulatedFailure
@@ -70,18 +71,23 @@ def test_resume_is_noop_when_complete(spark, pages, tmp_path_factory):
 
 
 # ------------------------------------------------------------ segment merge
-@pytest.fixture(scope="module")
-def full_and_segments(spark, pages):
-    from pyspark.sql import functions as F
-
-    tokenized = index_build.tokenize_documents(pages).cache()
-    full = index_build.build_index_tables(tokenized)
-    seg_col = F.pmod(
+def _seg_col():
+    return F.pmod(
         F.conv(F.substring(F.col("doc_id"), 1, 15), 16, 10).cast("long"), F.lit(3)
     ).cast("int")
+
+
+@pytest.fixture(scope="module")
+def tokenized(pages):
+    return index_build.tokenize_documents(pages).cache()
+
+
+@pytest.fixture(scope="module")
+def full_and_segments(spark, tokenized):
+    full = index_build.build_index_tables(tokenized)
     segs = [
         index_build.build_index_tables(
-            tokenized.withColumn("_s", seg_col).filter(F.col("_s") == i).drop("_s")
+            tokenized.withColumn("_s", _seg_col()).filter(F.col("_s") == i).drop("_s")
         )
         for i in range(3)
     ]
@@ -114,26 +120,22 @@ def _decoded(blocks_df) -> pd.DataFrame:
 
 
 @pytest.fixture(scope="module")
-def block_segments(spark, full_and_segments):
-    full, segs = full_and_segments
-    docnos = shards.assign_docnos(spark, full.doc_stats.select("doc_id")).cache()
-    stats = full.stats.collect()[0]
-    import math as m
-
-    shard_size = max(1, m.ceil(int(stats["n_docs"]) / 8))
-    avgdl = float(stats["avgdl"])
-    seg_blocks = [
-        shards.build_sharded_index(
-            spark, s, n_shards=8, block_size=16, docnos=docnos,
-            shard_size=shard_size, avgdl=avgdl,
-        ).blocks.cache()
-        for s in segs
-    ]
-    global_idx = shards.build_sharded_index(
-        spark, full, n_shards=8, block_size=16, docnos=docnos,
-        shard_size=shard_size, avgdl=avgdl,
+def block_segments(spark, tokenized, tmp_path_factory):
+    """Doc-disjoint block segments cut from ONE production build: segment i
+    is the full index with every other segment's docs tombstoned, so all
+    segments share the global docno space by construction."""
+    path = str(tmp_path_factory.mktemp("full_blocks"))
+    global_idx = shards.shard_and_write_from_tokenized(
+        spark, tokenized, path, n_shards=8, block_size=16
     )
-    return global_idx, seg_blocks, avgdl
+    seg_of = global_idx.docs.select("doc_id", _seg_col().alias("_s"))
+    seg_blocks = [
+        merge.apply_tombstones(
+            spark, global_idx, seg_of.filter(F.col("_s") != i)
+        ).blocks.cache()
+        for i in range(3)
+    ]
+    return global_idx, seg_blocks, global_idx.avgdl
 
 
 def test_block_merge_equals_direct_build(spark, block_segments):

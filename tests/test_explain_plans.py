@@ -18,7 +18,7 @@ N_DOCS = 300
 def persisted(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("idx"))
     pages = spark.createDataFrame(webgen.generate_pandas(N_DOCS))
-    index_build.build_and_write_index(spark, pages, path, postings_partitions=4)
+    index_build.write_index(index_build.build_index(pages), path, postings_partitions=4)
     return index_build.read_index(spark, path)
 
 

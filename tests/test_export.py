@@ -1,10 +1,13 @@
-"""Layout export: compressed sharded index → logical IndexTables.
+"""The production sharded build, checked through its layout export.
 
-``shards.export_index`` must be the exact inverse of the build's logical→
-sharded conversion: exporting a sharded index yields the same postings
-multiset, doc_stats, term_stats, and stats as building the logical tables
-directly from the corpus — and the exhaustive BM25 engine over exported
-tables is rank-identical to WAND over the blocks it came from.
+``shards.build_and_write_sharded`` is the one persisted build. Exporting
+its compressed blocks (``shards.export_index``) must yield the same
+postings multiset, doc_stats, term_stats, stats and doc metadata as the
+in-memory logical spec (``index_build.build_index``) built directly from
+the corpus — and the exhaustive BM25 engine over the exported tables is
+rank-identical to WAND over the blocks they came from. The same 400-doc,
+4-shard build also pins co-sharded docs, kill/resume identity and
+head-term skew; tiny-corpus and fractional-boost edges close the file.
 """
 
 import pandas as pd
@@ -110,3 +113,106 @@ def test_export_fallback_without_doc_len_column(spark, sharded):
     b = {r["doc_id"]: r["doc_len"] for r in from_docs.doc_stats.collect()}
     # fallback misses only zero-posting docs (none in this corpus)
     assert a == b
+
+
+def _decoded(index) -> pd.DataFrame:
+    out = shards.decode_blocks_to_postings(index.blocks.toPandas())
+    return out.sort_values(["term", "docno"]).reset_index(drop=True)
+
+
+def test_docs_cosharded(sharded):
+    rows = sharded.docs.collect()
+    assert len(rows) == N_DOCS
+    assert all(r["shard"] == r["docno"] // sharded.shard_size for r in rows)
+
+
+def test_tiny_corpus_build_and_query(spark, tmp_path_factory):
+    """Degenerate sizes: 3 docs across 4 shards (shard_size=1, some shards
+    empty), single-block terms, queries with no hits."""
+    path = str(tmp_path_factory.mktemp("tiny"))
+    pages = spark.createDataFrame(webgen.generate_pandas(3))
+    ix = shards.build_and_write_sharded(spark, pages, path, n_shards=4)
+    assert ix.n_docs == 3 and ix.shard_size == 1
+    assert ix.docs.count() == 3
+    eng = WandSearchEngine(spark, ix)
+    res = eng.search_batch([(0, "zzzzunseen tokens")], top_k=5)
+    assert res is None or res.count() == 0
+    res2 = eng.search_batch(webgen.reference_queries()[:3], top_k=5)
+    assert res2 is None or res2.count() >= 0
+
+
+def test_resumable_direct_build_identical_after_kill(spark, pages, tmp_path_factory, sharded):
+    """Kill the resumable production build mid-tokenize; resume; the final
+    compressed index must be identical to the single-shot build."""
+    from searchengine_spark.operators import checkpoint
+    from searchengine_spark.operators.checkpoint import SimulatedFailure
+
+    path = str(tmp_path_factory.mktemp("resume"))
+    with pytest.raises(SimulatedFailure):
+        checkpoint.checkpointed_tokenize(spark, pages, path, n_chunks=4, fail_after=2)
+    resumed = shards.build_and_write_sharded(
+        spark, pages, path, n_shards=N_SHARDS, resumable=True, n_chunks=4
+    )
+    pd.testing.assert_frame_equal(_decoded(resumed), _decoded(sharded))
+    assert resumed.n_docs == sharded.n_docs
+    assert resumed.avgdl == pytest.approx(sharded.avgdl, abs=1e-9)
+
+
+def test_fractional_boost_fails_loudly(monkeypatch):
+    """The int32 tf cast is only sound for integral field boosts; a
+    fractional boost config must fail before the cast can truncate."""
+    monkeypatch.setattr(shards, "TITLE_BOOST", 2.5)
+    with pytest.raises(ValueError, match="integral field boosts"):
+        shards._assert_integral_boosts()
+
+
+def test_head_term_skew_is_neutralized(sharded):
+    """Doc-range sharding must spread every head term's postings across
+    (almost) all shards with near-uniform per-shard lists — the explicit
+    skew handling the north rule demands, measured from block metadata."""
+    report = shards.term_skew_report(sharded, top_n=5).collect()
+    assert report, "no terms in skew report"
+    for r in report:
+        # head terms (df >> n_shards) must appear in every shard...
+        if r["df"] >= 4 * sharded.n_shards:
+            assert r["n_shards_present"] == sharded.n_shards, r
+            # ...with no shard holding a disproportionate slice
+            assert r["skew"] <= 2.0, r
+
+
+def test_cli_build_verify_query_export(spark, tmp_path, capsys):
+    """CLI over the one build path: `build` writes the sharded index and
+    `verify` checks it (and fails on a corrupted meta.json); `query` picks
+    WAND for the sharded index and exhaustive BM25 for its `export`, and
+    both rank the same docs."""
+    import json
+
+    from searchengine_spark import cli
+
+    pages_path = str(tmp_path / "pages")
+    webgen.generate_spark(spark, 120, partitions=2).write.parquet(pages_path)
+    idx, logical = str(tmp_path / "idx"), str(tmp_path / "logical")
+    assert cli.main(["build", "--input", pages_path, "--out", idx, "--shards", "2"]) == 0
+    assert cli.main(["verify", "--index", idx]) == 0
+    assert cli.main(["export", "--index", idx, "--out", logical, "--partitions", "2"]) == 0
+    capsys.readouterr()
+
+    queries = [q for _, q in webgen.reference_queries()[:4]]
+
+    def ranks(index_path):
+        assert cli.main(["query", "--index", index_path, "--top-k", "5", *queries]) == 0
+        rows = [json.loads(l) for l in capsys.readouterr().out.splitlines()]
+        return sorted(
+            (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9)) for r in rows
+        )
+
+    got = ranks(idx)
+    assert got, "query returned no results"
+    assert got == ranks(logical)
+
+    with open(f"{idx}/meta.json") as f:
+        meta = json.load(f)
+    meta["n_docs"] += 1
+    with open(f"{idx}/meta.json", "w") as f:
+        json.dump(meta, f)
+    assert cli.main(["verify", "--index", idx]) == 1

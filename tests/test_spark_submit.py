@@ -69,7 +69,7 @@ def test_spark_submit_py_files_end_to_end(spark, tmp_path):
     index_path = os.path.join(tmpdir, "sharded_index")
     out = _submit(
         tmpdir, zpath, app,
-        "build", "--sharded", "--shards", "4", "--positions",
+        "build", "--shards", "4", "--positions",
         "--input", pages_path, "--out", index_path,
     )
     built = json.loads([l for l in out.splitlines() if l.startswith("{")][-1])
@@ -79,7 +79,7 @@ def test_spark_submit_py_files_end_to_end(spark, tmp_path):
 
     out = _submit(
         tmpdir, zpath, app,
-        "query", "--wand", "--index", index_path, "--top-k", "5",
+        "query", "--index", index_path, "--top-k", "5",
         planted_term(0),
     )
     rows = [json.loads(l) for l in out.splitlines() if l.startswith("{")]

@@ -24,9 +24,14 @@ N_DOCS = 300
 
 
 @pytest.fixture(scope="module")
-def spark_index(spark):
+def tokenized(spark):
     pages = spark.createDataFrame(webgen.generate_pandas(N_DOCS))
-    tables = index_build.build_index(pages)
+    return index_build.tokenize_documents(pages).cache()
+
+
+@pytest.fixture(scope="module")
+def spark_index(tokenized):
+    tables = index_build.build_index_tables(tokenized)
     for name in ("docs", "postings", "doc_stats", "term_stats", "stats"):
         setattr(tables, name, getattr(tables, name).cache())
     return tables
@@ -38,13 +43,20 @@ def docnos(spark, spark_index):
 
 
 @pytest.fixture(scope="module")
-def sharded(spark, spark_index, docnos):
-    idx = shards.build_sharded_index(
-        spark, spark_index, n_shards=16, block_size=32, docnos=docnos
-    )
-    idx.blocks = idx.blocks.cache()
-    idx.docs = idx.docs.cache()
-    return idx
+def build(spark, tokenized, tmp_path_factory):
+    """The production sharded build of the module corpus, one scratch dir
+    per layout."""
+
+    def _build(**layout):
+        path = str(tmp_path_factory.mktemp("sharded"))
+        return shards.shard_and_write_from_tokenized(spark, tokenized, path, **layout)
+
+    return _build
+
+
+@pytest.fixture(scope="module")
+def sharded(build):
+    return build(n_shards=16, block_size=32)
 
 
 def test_docno_assignment_dense_and_ordered(docnos, spark_index):
@@ -75,17 +87,13 @@ def test_blocks_roundtrip_to_logical_postings(spark, spark_index, sharded, docno
     )
 
 
-def test_shard_invariance(spark, spark_index, docnos, sharded):
-    one = shards.build_sharded_index(
-        spark, spark_index, n_shards=1, block_size=32, docnos=docnos
-    )
+def test_shard_invariance(build, sharded):
+    one = build(n_shards=1, block_size=32)
     pd.testing.assert_frame_equal(_decoded_postings(one), _decoded_postings(sharded))
 
 
-def test_block_size_invariance(spark, spark_index, docnos, sharded):
-    big = shards.build_sharded_index(
-        spark, spark_index, n_shards=16, block_size=1024, docnos=docnos
-    )
+def test_block_size_invariance(build, sharded):
+    big = build(n_shards=16, block_size=1024)
     pd.testing.assert_frame_equal(_decoded_postings(big), _decoded_postings(sharded))
 
 
@@ -131,22 +139,20 @@ def test_sharded_write_read_roundtrip(spark, sharded, tmp_path_factory):
     )
 
 
-def test_shard_invariance_high_shard_count(spark, spark_index, docnos, sharded):
+def test_shard_invariance_high_shard_count(build, sharded):
     """Auto-sharding policy arm (round-3): the decoded posting multiset must
     stay identical at n_shards=256 (shard_size≈2 here — far past any layout
     assumption that shards are big), so deriving n_shards from a constant
     docs-per-shard target at 10^12 docs changes layout only, never data."""
-    many = shards.build_sharded_index(
-        spark, spark_index, n_shards=256, block_size=32, docnos=docnos
-    )
+    many = build(n_shards=256, block_size=32)
     assert many.n_shards == 256 and many.shard_size >= 1
     pd.testing.assert_frame_equal(_decoded_postings(many), _decoded_postings(sharded))
 
 
-def test_default_shard_count_is_docs_per_shard_policy(spark, spark_index, docnos):
+def test_default_shard_count_is_docs_per_shard_policy(build, spark_index):
     """n_shards=None derives from DEFAULT_DOCS_PER_SHARD: a fixed default
     shard count would make 6×10^10-doc shards at 10^12 docs."""
-    auto = shards.build_sharded_index(spark, spark_index, docnos=docnos)
+    auto = build()
     n = spark_index.stats.collect()[0]["n_docs"]
     assert auto.n_shards == shards.derive_n_shards(n)
     # policy math at the scales that matter

@@ -205,12 +205,15 @@ def test_direct_probe_empty_and_sparse_results(spark, engine):
     assert all(r["query_id"] == 1 for r in rows)
 
 
-def test_direct_mode_requires_written_index(spark):
-    from searchengine_spark.operators import index_build
+def test_direct_mode_requires_written_index(spark, tmp_path):
+    from searchengine_spark.operators import merge
 
     pages = spark.createDataFrame(webgen.generate_pandas(30))
-    tables = index_build.build_index(pages)
-    mem = shards.build_sharded_index(spark, tables, n_shards=2)
+    written = shards.build_and_write_sharded(spark, pages, str(tmp_path), n_shards=2)
+    # a compaction without out_path is an in-memory plan: no path to probe
+    mem = merge.apply_tombstones(
+        spark, written, spark.createDataFrame([], "doc_id string")
+    )
     assert mem.path is None
     # a term with idf > 0, so the batch survives query analysis and reaches
     # the join-mode gate

@@ -160,7 +160,7 @@ def test_warc_to_index_end_to_end(spark, tmp_path):
 
 def test_cli_ingest_and_direct_build(spark, tmp_path):
     """CLI surface: `ingest-warc` materializes the pages table; `build
-    --input-format warc --sharded` indexes straight from containers (the
+    --input-format warc` indexes straight from containers (the
     100 TB path that skips one full corpus write+read)."""
     from searchengine_spark import cli
     from searchengine_spark.operators import shards
@@ -179,7 +179,7 @@ def test_cli_ingest_and_direct_build(spark, tmp_path):
     idx = tmp_path / "idx2"
     assert cli.main([
         "build", "--input", str(seg), "--input-format", "warc",
-        "--sharded", "--shards", "2", "--out", str(idx),
+        "--shards", "2", "--out", str(idx),
     ]) == 0
     assert shards.read_sharded_index(spark, str(idx)).n_docs == len(pages)
 
