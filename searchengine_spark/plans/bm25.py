@@ -31,9 +31,11 @@ from __future__ import annotations
 
 from collections import Counter
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 from searchengine_spark.config import (
     B,
@@ -91,6 +93,59 @@ def paginate(results: list, page: int = 1, per_page: int = 10) -> dict:
     }
 
 
+# the row contract of every ranked ``with_metadata=True`` result
+RESULT_SCHEMA = (
+    "query_id int, rank int, doc_id string, url string, title string, "
+    "description string, content_snippet string, score double"
+)
+_RESULT_COLS = [f.split()[0] for f in RESULT_SCHEMA.split(", ")]
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """Driver-known rows as a Spark frame built through Arrow: the JVM reads
+    one Arrow stream and plans a ``LocalTableScan``. A list of tuples would
+    instead become an RDD of pickled rows over ``defaultParallelism``
+    partitions that Python workers deserialize on every use — the whole
+    cost of a one-query batch's tiny frames. Built as a pyarrow table, not
+    a pandas frame, because PySpark routes an EMPTY pandas frame through
+    that same RDD path."""
+    struct = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) if rows else [[] for _ in arrow]
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)
+
+
+def finish_with_metadata(
+    spark: SparkSession, rows: list[tuple], orig_tokens_by_qid: dict
+) -> DataFrame:
+    """The one query-relevant-snippet tail of every ranked result surface
+    (indexer.py:344-374). ``rows`` are the ≤ k·|batch| winners with their
+    doc metadata, in RESULT_SCHEMA column order, as the caller collected
+    them in ONE probe job that runs no Python worker and no sort. The
+    snippet is windowed around the first query-term hit here in the driver
+    (``textproc.relevant_snippet``), and the rows come back ordered by
+    (query_id, rank) as a :func:`local_frame` — so the caller's own
+    ``collect`` starts no job at all."""
+    return local_frame(
+        spark,
+        sorted(
+            (
+                (q, rank, doc_id, url, title, desc,
+                 textproc.relevant_snippet(
+                     content or "", orig_tokens_by_qid.get(q, [])
+                 ),
+                 score)
+                for q, rank, doc_id, url, title, desc, content, score in rows
+            ),
+            key=lambda r: (r[0], r[1]),
+        ),
+        RESULT_SCHEMA,
+    )
+
+
 def attach_result_metadata(
     topk: DataFrame,
     docs: DataFrame,
@@ -98,45 +153,23 @@ def attach_result_metadata(
     stopwords=DEFAULT_STOPWORDS,
     exclude_domains: bool = False,
 ) -> DataFrame:
-    """Metadata + query-relevant-snippet tail shared by every ranked result
-    surface (indexer.py:344-374): join the (tiny, ≤ k·|batch|-row) ``topk``
-    frame carrying (query_id, rank, doc_id, score) back to the docs
-    dimension, window the snippet around the first query-term hit (Arrow
-    UDF over the k result rows only — never the corpus), optionally apply
-    the F11 domain filter (app.py:136-154) after selection. Used by the
-    exhaustive BM25 engine and the hybrid combine's serving path — one
-    contract, one implementation."""
+    """Metadata tail of the exhaustive BM25 engine and the hybrid combine:
+    join the (tiny, ≤ k·|batch|-row) ``topk`` frame carrying (query_id,
+    rank, doc_id, score) back to the docs dimension, optionally apply the
+    F11 domain filter (app.py:136-154) after selection, collect, and finish
+    in the driver (:func:`finish_with_metadata` — the tail WAND shares).
+    EAGER: the ranking plan runs here, and the returned frame is local."""
     orig_tokens_by_qid = {
         qid: (analyze_query(text, stopwords) or (None, [], None))[1]
         for qid, text in queries
     }
-
-    @F.pandas_udf("string")
-    def snippet_udf(qid: pd.Series, content: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                textproc.relevant_snippet(c or "", orig_tokens_by_qid.get(int(q), []))
-                for q, c in zip(qid, content)
-            ]
-        )
-
-    out = topk.join(docs, "doc_id")
+    probe = topk.join(docs, "doc_id")
     if exclude_domains:
         from searchengine_spark.plans.classify import excluded_domain_col
 
-        out = out.filter(~excluded_domain_col(F.col("url")))
-    return out.select(
-        "query_id",
-        "rank",
-        "doc_id",
-        "url",
-        "title",
-        "description",
-        snippet_udf(F.col("query_id"), F.col("content_snippet")).alias(
-            "content_snippet"
-        ),
-        "score",
-    ).orderBy("query_id", "rank")
+        probe = probe.filter(~excluded_domain_col(F.col("url")))
+    rows = probe.select(*_RESULT_COLS).collect()
+    return finish_with_metadata(topk.sparkSession, rows, orig_tokens_by_qid)
 
 
 def boost_chain_expr() -> Column:
@@ -223,11 +256,13 @@ class BM25SearchEngine:
                 term_rows.append((qid, t, float(m), imp))
         if not term_rows:
             return None, None, []
-        qterms = self.spark.createDataFrame(
-            term_rows, "query_id int, term string, mult double, importance double"
+        qterms = local_frame(
+            self.spark, term_rows,
+            "query_id int, term string, mult double, importance double",
         )
-        qmeta = self.spark.createDataFrame(
-            meta_rows, "query_id int, original_query string, orig_tokens array<string>"
+        qmeta = local_frame(
+            self.spark, meta_rows,
+            "query_id int, original_query string, orig_tokens array<string>",
         )
         return qterms, qmeta, sorted({r[1] for r in term_rows})
 

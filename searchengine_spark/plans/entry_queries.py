@@ -1632,8 +1632,8 @@ def materialize_stemmed_oracle_table(sf_dir: str) -> str:
     toks = [textproc.tokenize_filtered(t or "") for t in texts]
     snippets = [textproc.make_snippet(t or "") for t in texts]
     # query-relevant snippet for STEMMED_QUERY (T9/T10 twin): the same
-    # pure windowing function the engine's metadata-tail Arrow UDF runs
-    # (plans/bm25.attach_result_metadata), precomputed per doc so the
+    # pure windowing function the engine's driver-side metadata tail runs
+    # (plans/bm25.finish_with_metadata), precomputed per doc so the
     # serving-row oracle (SQL_BM25_SERVING) is a plain column read
     from searchengine_spark.plans.bm25 import analyze_query
 
@@ -1875,10 +1875,11 @@ SQL_HYBRID_TOPK = _build_hybrid_sql(
 def q_bm25_serving(spark, sf_dir) -> DataFrame:
     """The full serving row (Q6–Q8 projection + T9/T10 query-relevant
     snippet, indexer.py:344-374): search_batch WITH metadata — top-k join
-    back to the docs dimension, snippet windowed around the query terms by
-    the Arrow UDF over the k result rows only. The twin reads the same
-    pure windowing function's output from the stemmed materialization
-    (rel_snippet) and rebuilds url/rank/score in SQL."""
+    back to the docs dimension, snippet windowed around the query terms in
+    the driver over the k result rows only (plans/bm25.finish_with_metadata).
+    The twin reads the same pure windowing function's output from the
+    stemmed materialization (rel_snippet) and rebuilds url/rank/score in
+    SQL."""
     from searchengine_spark.plans.bm25 import BM25SearchEngine
     from searchengine_spark.plans.text_only import build_text_only_index
 

@@ -46,7 +46,11 @@ from pyspark.sql import functions as F
 
 from searchengine_spark.config import DEFAULT_STOPWORDS
 from searchengine_spark.functions import textproc
-from searchengine_spark.plans.bm25 import BM25SearchEngine
+from searchengine_spark.plans.bm25 import (
+    BM25SearchEngine,
+    attach_result_metadata,
+    local_frame,
+)
 
 EMBEDDING_DIM = 384  # MiniLM-L6-v2 dimensionality (utils/config.py:90-93)
 BM25_WEIGHT = 0.7  # optimized_indexer.py:138-140 (hard-coded there)
@@ -140,7 +144,8 @@ class HybridSearchEngine:
             from searchengine_spark.plans import ann
 
             emb = ann.assign_lsh_buckets(self.embeddings, ann_planes)
-            qdf = self.spark.createDataFrame(
+            qdf = local_frame(
+                self.spark,
                 [
                     (
                         qid,
@@ -157,7 +162,8 @@ class HybridSearchEngine:
             )
             src = emb.join(F.broadcast(qdf), F.col("bucket") == F.col("qbucket"))
         else:
-            qdf = self.spark.createDataFrame(
+            qdf = local_frame(
+                self.spark,
                 [
                     (qid, [float(x) for x in vec])
                     for (qid, _), vec in zip(queries, qvecs)
@@ -189,8 +195,10 @@ class HybridSearchEngine:
         ``with_metadata=True`` attaches the same url/title/description/
         query-relevant-snippet columns the ranked engines return (shared
         :func:`~searchengine_spark.plans.bm25.attach_result_metadata` tail
-        over the ≤ k·|batch| combined rows), so the serving layer can put
-        hybrid behind the identical JSON contract (app.py:104-194)."""
+        over the ≤ k·|batch| combined rows, finished in the driver), so the
+        serving layer can put hybrid behind the identical JSON contract
+        (app.py:104-194). That result is EAGER and local, already sorted by
+        (query_id, rank); without metadata the plan stays lazy and sorts."""
         bm25 = self.bm25.search_batch(
             queries, top_k=2 * top_k, stopwords=stopwords, with_metadata=False
         )
@@ -210,15 +218,11 @@ class HybridSearchEngine:
             )
         )
         w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-        out = (
-            combined.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= top_k)
-            .orderBy("query_id", "rank")
+        out = combined.withColumn("rank", F.row_number().over(w)).filter(
+            F.col("rank") <= top_k
         )
         if not with_metadata:
-            return out
-        from searchengine_spark.plans.bm25 import attach_result_metadata
-
+            return out.orderBy("query_id", "rank")
         return attach_result_metadata(
             out.select("query_id", "rank", "doc_id", "score"),
             self.bm25._docs,

@@ -45,6 +45,15 @@ threshold. Two exchange-free-on-docs join modes, chosen by a size gate:
 In both modes no shuffle of doc metadata ever happens (asserted in
 tests/test_explain_plans for both).
 
+The ranked winners (≤ k·|batch| rows) are then collected and finished in
+the driver by the tail every ranked engine shares
+(plans/bm25.finish_with_metadata): one pruned, JVM-only probe of the docs
+store for the winners' url/title/description/snippet, the query-relevant
+snippet windowed in Python on the driver, and the rows returned sorted by
+(query_id, rank) as an Arrow-built local frame. Once the winners are
+known, no job starts a Python worker or runs a global sort — at one query
+per batch those fixed per-job costs, not the data, are the batch.
+
 Exactness argument (property-tested against the exhaustive engine):
 
 * block upper bound: ``UB(b of term t) = w_t·max_partial(b) +
@@ -116,7 +125,13 @@ from searchengine_spark.config import (
 )
 from searchengine_spark.functions import fieldsig
 from searchengine_spark.operators import codec
-from searchengine_spark.plans.bm25 import analyze_query, boost_chain_expr
+from searchengine_spark.plans.bm25 import (
+    RESULT_SCHEMA,
+    analyze_query,
+    boost_chain_expr,
+    finish_with_metadata,
+    local_frame,
+)
 
 MAX_BOOST = (
     max(TITLE_PHRASE_BOOST, DESC_PHRASE_BOOST, SNIPPET_PHRASE_BOOST, 1.0)
@@ -962,10 +977,12 @@ class WandSearchEngine:
         bounds keep emission tight; broadcast otherwise).
 
         NOTE: with ``with_metadata=True`` this method is EAGER — the ranked
-        winners (≤ k·|batch| rows) are collected here to drive the pruned
-        metadata re-fetch, so the full query pipeline executes at call time
-        and the returned DataFrame is a cheap final probe. Pass
-        ``with_metadata=False`` for a fully lazy plan."""
+        winners (≤ k·|batch| rows) are collected here, their metadata is
+        probed and their snippets windowed in the driver, so the full query
+        pipeline executes at call time and the returned DataFrame is a
+        local frame already sorted by (query_id, rank): collecting it
+        starts no job. Pass ``with_metadata=False`` for a fully lazy
+        plan."""
         qinfo, term_list = self._analyze(queries, stopwords)
         if qinfo is None:
             return None  # no analyzable query (empty / stopword-only)
@@ -973,14 +990,13 @@ class WandSearchEngine:
             # analyzable queries whose every term has idf <= 0: every match
             # scores 0 and dies at the threshold — exact result is ZERO ROWS
             # (the exhaustive engine returns an empty frame here, not None)
-            schema = (
-                "query_id int, rank int, doc_id string, url string, "
-                "title string, description string, content_snippet string, "
-                "score double"
+            return local_frame(
+                self.spark,
+                [],
+                RESULT_SCHEMA
                 if with_metadata
-                else "query_id int, rank int, doc_id string, score double"
+                else "query_id int, rank int, doc_id string, score double",
             )
-            return self.spark.createDataFrame([], schema)
         # persist the narrow phase-1 candidate frame: the θ tree-agg and the
         # ub-filter branch both consume it, and without the persist the
         # (expensive) phase-1 kernel would execute twice. Storage level by
@@ -1055,7 +1071,8 @@ class WandSearchEngine:
                 "docs_join='direct' needs a written index (index.path); "
                 "this index is an in-memory plan"
             )
-        qmeta = self.spark.createDataFrame(
+        qmeta = local_frame(
+            self.spark,
             [(qid, oq, toks) for qid, _, _, toks, oq in qinfo],
             "query_id int, original_query string, orig_tokens array<string>",
         )
@@ -1103,60 +1120,43 @@ class WandSearchEngine:
             self._lazy_cands = raw_cands
             return out.select("query_id", "rank", "doc_id", "score")
 
-        orig_tokens_by_qid = {qid: toks for qid, _, _, toks, _ in qinfo}
-
-        @F.pandas_udf("string")
-        def snippet_udf(qid: pd.Series, content: pd.Series) -> pd.Series:
-            from searchengine_spark.functions import textproc
-
-            return pd.Series(
-                [
-                    textproc.relevant_snippet(c or "", orig_tokens_by_qid.get(int(q), []))
-                    for q, c in zip(qid, content)
-                ]
-            )
-
         # winners-only metadata fetch: the ranked set is ≤ top_k·|batch|
         # rows, so collect it (tiny — the same cardinality the caller will
         # collect) and re-probe the docs store with DRIVER-KNOWN keys: the
-        # shard IN-list prunes whole shard files and the docno range/IN-list
-        # prunes row groups of the docno-sorted layout at the parquet scan —
-        # the winner fetch touches a few row groups, not the corpus, and no
-        # doc metadata ever enters an exchange.
+        # shard IN-list prunes whole shard files and the docno range prunes
+        # row groups of the docno-sorted layout at the parquet scan — the
+        # winner fetch touches a few row groups, not the corpus, and no doc
+        # metadata ever enters an exchange. The docno IN-list keeps the
+        # probe to the winners' docs (≤ top_k·|batch| rows), so the winners
+        # join them in the driver on (shard, docno) — a join in the plan
+        # would broadcast the winners in a job of its own.
         # the collect is the last job that touches raw_cands: the final
         # probe below is built from the collected winners + the docs store,
         # so search_batch's finally can drop the persist as soon as this
         # method returns (or raises).
-        winners = out.select(
-            "query_id", "rank", "shard", "docno", "doc_id", "score"
-        ).collect()
-        winners_df = self.spark.createDataFrame(
-            [(r["query_id"], r["rank"], r["shard"], r["docno"], r["score"])
-             for r in winners] or [],
-            "query_id int, rank int, shard int, docno long, score double",
-        )
-        meta = self.index.docs.select(
-            "shard", "docno", "doc_id", "url", "title", "description",
-            "content_snippet",
-        )
-        if winners:
-            shard_list = sorted({r["shard"] for r in winners})
-            docnos = sorted({r["docno"] for r in winners})
-            meta = meta.filter(
-                F.col("shard").isin(shard_list)
-                & F.col("docno").between(docnos[0], docnos[-1])
+        winners = out.select("query_id", "rank", "shard", "docno", "score").collect()
+        if not winners:
+            return local_frame(self.spark, [], RESULT_SCHEMA)
+        docnos = sorted({w["docno"] for w in winners})
+        meta = {
+            (m["shard"], m["docno"]): m[2:]
+            for m in self.index.docs.select(
+                "shard", "docno", "doc_id", "url", "title", "description",
+                "content_snippet",
             )
-            if len(docnos) <= 2048:  # keep the pushed IN-list bounded
-                meta = meta.filter(F.col("docno").isin(docnos))
-        return meta.join(F.broadcast(winners_df), ["shard", "docno"]).select(
-            "query_id",
-            "rank",
-            "doc_id",
-            "url",
-            "title",
-            "description",
-            snippet_udf(F.col("query_id"), F.col("content_snippet")).alias(
-                "content_snippet"
-            ),
-            "score",
-        ).orderBy("query_id", "rank")
+            .filter(
+                F.col("shard").isin(sorted({w["shard"] for w in winners}))
+                & F.col("docno").between(docnos[0], docnos[-1])
+                & F.col("docno").isin(docnos)
+            )
+            .collect()
+        }
+        return finish_with_metadata(
+            self.spark,
+            [
+                (q, rank, *meta[(shard, docno)], score)
+                for q, rank, shard, docno, score in winners
+                if (shard, docno) in meta
+            ],
+            {qid: toks for qid, _, _, toks, _ in qinfo},
+        )

@@ -26,6 +26,7 @@ import queue
 import threading
 import time
 import urllib.parse
+from functools import cached_property
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import SparkSession
@@ -47,6 +48,12 @@ def _clamp_int(raw, default: int, lo: int, hi: int) -> int:
     except (TypeError, ValueError):
         return default
     return max(lo, min(val, hi))
+
+
+def _by_rank(rows: list) -> list:
+    """Collected result rows in (query_id, rank) order — a driver-side sort
+    of ≤ k·|batch| rows instead of a Spark ``orderBy`` job."""
+    return sorted(rows, key=lambda r: (r["query_id"], r["rank"]))
 
 
 class PhraseModeUnavailable(ValueError):
@@ -74,6 +81,12 @@ class _MicroBatcher:
     (app.py:111-194). Per-request results are UNCHANGED by batching:
     scores max-normalize and rank per query_id, so a query scores the same
     alone or among 200 others (asserted in tests/test_serving.py).
+
+    The ranked engines return their ``with_metadata`` result as a local
+    frame (plans/bm25.finish_with_metadata), so the dispatch's ``collect``
+    starts no Spark job; the ≤ k·|batch| rows are demuxed and ordered by
+    rank in Python — an ``orderBy`` would add a sampling job and a sort
+    stage to every batch.
     """
 
     def __init__(self, engine, window_ms: float, max_batch: int = 256):
@@ -151,7 +164,7 @@ class _MicroBatcher:
             )
             by_qid: dict[int, list] = {}
             if res is not None:
-                for r in res.orderBy("query_id", "rank").collect():
+                for r in _by_rank(res.collect()):
                     by_qid.setdefault(int(r["query_id"]), []).append(r)
         except Exception as e:  # fan the failure out to every waiter
             for _q, _k, slot in batch:
@@ -167,8 +180,9 @@ class SearchService:
     """Engine façade the HTTP layer calls; usable directly in tests/CLI.
 
     ``engine`` is a BM25SearchEngine or WandSearchEngine (same
-    ``search_batch`` contract). Health counts are collected once at init
-    (two scalar jobs) — the reference reads len() of its in-RAM dicts.
+    ``search_batch`` contract). Constructing a service starts no Spark job:
+    the health counts are computed on the first ``health()`` and cached —
+    the reference reads len() of its in-RAM dicts.
 
     ``batch_window_ms > 0`` routes requests through a :class:`_MicroBatcher`
     so concurrent clients share one Spark plan per window; 0 keeps the
@@ -200,14 +214,19 @@ class SearchService:
         self.batcher = (
             _MicroBatcher(engine, batch_window_ms) if batch_window_ms > 0 else None
         )
-        tables = getattr(engine, "tables", None)
-        index = getattr(engine, "index", None)
+
+    @cached_property
+    def document_count(self) -> int:
+        tables = getattr(self.engine, "tables", None)
         if tables is not None:
-            self.document_count = int(tables.stats.collect()[0]["n_docs"])
-            self.term_count = int(tables.term_stats.count())
-        else:
-            self.document_count = int(index.n_docs)
-            self.term_count = int(index.term_stats.count())
+            return int(tables.stats.collect()[0]["n_docs"])
+        return int(self.engine.index.n_docs)
+
+    @cached_property
+    def term_count(self) -> int:
+        tables = getattr(self.engine, "tables", None)
+        src = tables if tables is not None else self.engine.index
+        return int(src.term_stats.count())
 
     # -- app.py:104-194 ------------------------------------------------
     def search(
@@ -256,7 +275,7 @@ class SearchService:
             rows = self.batcher.submit(query, top_k)
         else:
             res = self.engine.search_batch([(0, query)], top_k=top_k)
-            rows = [] if res is None else res.orderBy("rank").collect()
+            rows = [] if res is None else _by_rank(res.collect())
         return self._rows_to_results(rows, source=self.search_mode)
 
     def _ranked_hybrid(self, query: str, top_k: int) -> list[dict]:
@@ -272,7 +291,7 @@ class SearchService:
         res = self.hybrid.search_batch(
             [(0, query)], top_k=top_k, with_metadata=True
         )
-        rows = [] if res is None else res.orderBy("rank").collect()
+        rows = [] if res is None else _by_rank(res.collect())
         return self._rows_to_results(rows, source="hybrid")
 
     def _ranked_phrase(self, query: str, top_k: int) -> list[dict]:

@@ -83,8 +83,9 @@ def test_wand_prunes_positional_streams(spark, tmp_path_factory):
         spark, pages, path, n_shards=2, with_positions=True
     )
     qterms = [r["term"] for r in index.term_stats.orderBy("df").limit(2).collect()]
+    # the lazy plan: a with_metadata=True result is a local frame
     res = WandSearchEngine(spark, index).search_batch(
-        [(0, " ".join(qterms))], top_k=5
+        [(0, " ".join(qterms))], top_k=5, with_metadata=False
     )
     assert res is not None
     plan = _plan(res)
@@ -104,8 +105,10 @@ def test_wand_docs_metadata_never_shuffled(spark, tmp_path_factory):
     pages = spark.createDataFrame(webgen.generate_pandas(N_DOCS))
     index = shards.build_and_write_sharded(spark, pages, path, n_shards=2)
     qterms = [r["term"] for r in index.term_stats.orderBy("df").limit(2).collect()]
+    # the lazy plan holds the blocks scan and the phase-2 docs join; a
+    # with_metadata=True result is a local frame
     res = WandSearchEngine(spark, index).search_batch(
-        [(0, " ".join(qterms))], top_k=5
+        [(0, " ".join(qterms))], top_k=5, with_metadata=False
     )
     assert res is not None
     plan = _plan(res)

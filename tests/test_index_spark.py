@@ -145,3 +145,41 @@ def test_snippet_and_metadata_match_oracle(spark, spark_index, oracle):
             assert row["title"] == w["title"]
             assert row["description"] == w["description"]
             assert row["content_snippet"] == w["content_snippet"]
+
+
+@pytest.fixture(scope="module")
+def sharded_index(spark, corpus, tmp_path_factory):
+    from searchengine_spark.operators import shards
+
+    pdf, _ = corpus
+    path = str(tmp_path_factory.mktemp("sharded"))
+    return shards.build_and_write_sharded(
+        spark, spark.createDataFrame(pdf), path, n_shards=4
+    )
+
+
+@pytest.mark.parametrize("docs_join", ["broadcast", "direct"])
+def test_wand_snippet_and_metadata_match_oracle(spark, sharded_index, oracle, docs_join):
+    """WAND twin of test_snippet_and_metadata_match_oracle, in both phase-2
+    docs-join modes: per rank, the same doc and the same url, title,
+    description and query-relevant snippet as the reference."""
+    from searchengine_spark.plans.wand import WandSearchEngine
+
+    queries = webgen.reference_queries()[:4]
+    engine = WandSearchEngine(spark, sharded_index)
+    res = engine.search_batch(queries, top_k=10, docs_join=docs_join)
+    got: dict[int, list] = {}
+    for r in res.collect():
+        got.setdefault(r["query_id"], []).append(r)
+    checked = 0
+    for qid, qtext in queries:
+        want = oracle.search(qtext, top_k=10)
+        rows = sorted(got.get(qid, []), key=lambda r: r["rank"])
+        assert [r["doc_id"] for r in rows] == [w["doc_id"] for w in want], qtext
+        for row, w in zip(rows, want):
+            assert row["url"] == w["url"]
+            assert row["title"] == w["title"]
+            assert row["description"] == w["description"]
+            assert row["content_snippet"] == w["content_snippet"]
+            checked += 1
+    assert checked > 0
