@@ -17,15 +17,14 @@ pages table; also ``build --input-format warc`` to index straight from
 containers), ``build`` (= build_index.py + optimize_index.py: the one
 build, which writes the compressed sharded index), ``export`` (sharded →
 logical tables), ``query`` (= app.py search path; WAND over a sharded
-index, exhaustive BM25 over exported or merged logical tables), ``merge``
-(logical segment merge), ``verify`` (= verify_index.py).
+index), ``merge`` (doc-disjoint segments — ``build`` outputs or streamed
+segments — encoded into one sharded index), ``verify`` (= verify_index.py).
 """
 
 from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
 import time
 import uuid
@@ -112,19 +111,13 @@ def cmd_export(args) -> int:
 
 
 def cmd_query(args) -> int:
-    """The engine follows what is on disk: WAND over a sharded index
-    (``meta.json`` present), exhaustive BM25 over logical tables
-    (``export``/``merge`` outputs)."""
-    from searchengine_spark.operators import index_build, shards
-    from searchengine_spark.plans.bm25 import BM25SearchEngine
+    """WAND top-k over a sharded index (``build``/``merge`` outputs)."""
+    from searchengine_spark.operators import shards
     from searchengine_spark.plans.wand import WandSearchEngine
 
     spark = _spark(args)
     batch = list(enumerate(args.query))
-    if os.path.exists(os.path.join(args.index, "meta.json")):
-        engine = WandSearchEngine(spark, shards.read_sharded_index(spark, args.index))
-    else:
-        engine = BM25SearchEngine(spark, index_build.read_index(spark, args.index))
+    engine = WandSearchEngine(spark, shards.read_sharded_index(spark, args.index))
     res = engine.search_batch(batch, top_k=args.top_k)
     if res is None:
         print(json.dumps({"results": []}))
@@ -148,14 +141,14 @@ def cmd_phrase(args) -> int:
 
 
 def cmd_merge(args) -> int:
-    from searchengine_spark.operators import index_build, merge
+    """Doc-disjoint segments (each with a stage-1 ``tokenized/``) → one
+    sharded index through the one block encoder (operators/merge.py)."""
+    from searchengine_spark.operators import merge
 
     spark = _spark(args)
-    segments = [index_build.read_index(spark, p) for p in args.segments]
-    merged = merge.merge_index_tables(spark, segments)
-    index_build.write_index(merged, args.out, args.partitions)
-    n = spark.read.parquet(f"{args.out}/stats").collect()[0]["n_docs"]
-    print(json.dumps({"segments": len(args.segments), "merged_docs": n}))
+    ix = merge.merge_segments(spark, args.segments, args.out)
+    print(json.dumps({"segments": len(args.segments), "merged_docs": ix.n_docs,
+                      "n_shards": ix.n_shards}))
     return 0
 
 
@@ -298,9 +291,7 @@ def main(argv: list[str] | None = None) -> int:
     e.add_argument("--partitions", type=int, default=32)
     e.set_defaults(fn=cmd_export)
 
-    q = sub.add_parser(
-        "query", help="BM25 top-k (WAND over a sharded index, exhaustive over logical tables)"
-    )
+    q = sub.add_parser("query", help="BM25 top-k (WAND over a sharded index)")
     q.add_argument("--index", required=True)
     q.add_argument("--top-k", type=int, default=10)
     q.add_argument("query", nargs="+")
@@ -312,10 +303,12 @@ def main(argv: list[str] | None = None) -> int:
     ph.add_argument("phrase", nargs="+")
     ph.set_defaults(fn=cmd_phrase)
 
-    m = sub.add_parser("merge", help="merge doc-disjoint index segments")
-    m.add_argument("--segments", nargs="+", required=True)
+    m = sub.add_parser(
+        "merge", help="merge doc-disjoint segments into one sharded index"
+    )
+    m.add_argument("--segments", nargs="+", required=True,
+                   help="build outputs or streamed segment dirs (each with tokenized/)")
     m.add_argument("--out", required=True)
-    m.add_argument("--partitions", type=int, default=32)
     m.set_defaults(fn=cmd_merge)
 
     d = sub.add_parser(

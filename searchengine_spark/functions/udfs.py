@@ -1,14 +1,10 @@
-"""Arrow-vectorized pandas UDFs wrapping the pure text functions.
+"""Column-level wrappers around the pure text functions.
 
-These are the only Python↔JVM crossing points in the hot path; everything
-else (explode, groupBy, join, top-k) stays JVM-side in whole-stage codegen.
-No per-row Python UDFs anywhere (per ``input_hint``).
-
-Batches arrive as pandas Series via Arrow; each UDF maps the pure functions
-from :mod:`searchengine_spark.functions.textproc` over the batch. Stemming is
-memoized per-process (``lru_cache`` on :func:`porter.stem`), so the cost per
-batch is proportional to *unique* tokens, which on Zipf text is a small
-fraction of total tokens.
+:func:`extract_fields` is an Arrow-vectorized pandas UDF: batches arrive as
+pandas Series via Arrow and it maps the pure HTML extractors from
+:mod:`searchengine_spark.functions.textproc` over the batch (no per-row
+Python UDFs anywhere, per ``input_hint``). :func:`tokens_simple_col` is a
+native column expression that stays JVM-side in whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -16,7 +12,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, StringType, StructField, StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from searchengine_spark.config import DEFAULT_STOPWORDS
 from searchengine_spark.functions import textproc
@@ -46,22 +42,6 @@ def extract_fields(html: pd.Series) -> pd.DataFrame:
             "content": decoded.map(textproc.extract_text_from_html),
         }
     )
-
-
-@pandas_udf(ArrayType(StringType()))
-def tokenize_filtered(text: pd.Series) -> pd.Series:
-    """tokenize (text_processing.py:40-81) + stopword/length filter
-    (indexer.py:73-90) with the default 40-word stopword list."""
-    return text.map(
-        lambda t: textproc.tokenize_filtered(t or "", DEFAULT_STOPWORDS)
-    )
-
-
-@pandas_udf(ArrayType(StringType()))
-def tokenize_raw(text: pd.Series) -> pd.Series:
-    """tokenize only (text_processing.py:40-81), no stopword/length filter —
-    used for original-query-token membership tests (indexer.py:298)."""
-    return text.map(lambda t: textproc.tokenize(t or ""))
 
 
 def tokens_simple_col(col):

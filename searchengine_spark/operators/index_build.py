@@ -26,10 +26,12 @@ tokenized frame — posting rows live only inside its single shuffle. The
 logical tables here are the in-memory spec the exhaustive
 ``BM25SearchEngine`` scores over and the tests check that build against;
 ``shards.export_index`` derives them from a written sharded index, and
-:func:`write_index` persists them (export, segment merge, streaming
-segments) in ``POSTING_BUCKETS`` hash directories so query-time term
-lookups prune whole directories — the distributed analog of the
-reference's dict lookup (indexer.py:384-394).
+:func:`write_index` persists them — only for ``cli export``
+(``shards.export_and_write_index``) — in ``POSTING_BUCKETS`` hash
+directories so query-time term lookups prune whole directories — the
+distributed analog of the reference's dict lookup (indexer.py:384-394).
+Segment merges and streamed segments never persist logical tables: they
+go through the sharded encoder (operators/merge.py).
 """
 
 from __future__ import annotations

@@ -1,18 +1,21 @@
-"""Multi-pass segment merge for the inverted index.
+"""Segment merge for the inverted index.
 
 A *segment* is an index built over a disjoint subset of the corpus (e.g.
-one checkpoint chunk, one Iceberg snapshot increment, one day of crawl).
-The reference has no segments — it rebuilds the whole pickle in RAM
+one checkpoint chunk, one streamed micro-batch, one day of crawl). The
+reference has no segments — it rebuilds the whole pickle in RAM
 (indexer.py:109-167); a 10^12-doc index is necessarily built as segments
 that are merged in passes (the classic Lucene/inverted-file strategy).
 
 Two levels:
 
-* **logical merge** (:func:`merge_index_tables`) — segment ``IndexTables``
-  → one ``IndexTables``. Doc-disjointness makes postings/doc_stats/docs a
-  pure union (no combine); term df re-sums per term and idf/avgdl are
-  recomputed from merged totals — so a merge is NOT just a union of
-  term_stats, which is what the associativity test pins down.
+* **segment merge** (:func:`merge_segments`) — the stage-1 ``tokenized``
+  frames of doc-disjoint segments (every ``cli build`` output and every
+  streamed segment carries one) → one sharded index, through the one
+  block encoder (``shards.shard_and_write_from_tokenized``). Docnos are
+  dense in global doc_id order and ``shard = docno // shard_size``, so
+  segments written apart share no docno space; the encoder's re-encode
+  assigns one without re-running stage-1 extraction, the build's dominant
+  cost.
 
 * **block merge** (:func:`merge_block_segments`) — segment posting-*block*
   tables (operators/shards.py layout, shared docno space) → one block
@@ -35,9 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from searchengine_spark import config
-from searchengine_spark.operators import codec
+from searchengine_spark.operators import checkpoint, codec
 from searchengine_spark.operators import shards as shards_mod
-from searchengine_spark.operators.index_build import IndexTables
 from searchengine_spark.operators.shards import BLOCK_POS_SCHEMA, BLOCK_SCHEMA, DEFAULT_BLOCK_SIZE
 
 
@@ -45,40 +47,64 @@ def _union_all(dfs: list[DataFrame]) -> DataFrame:
     return reduce(lambda a, b: a.unionByName(b), dfs)
 
 
-def merge_index_tables(spark: SparkSession, segments: list[IndexTables]) -> IndexTables:
-    """Merge doc-disjoint logical segments into one logical index."""
-    if not segments:
+def merge_segments(
+    spark: SparkSession,
+    paths: list[str],
+    out: str,
+    n_shards: int | None = None,
+) -> shards_mod.ShardedIndex:
+    """Merge doc-disjoint segments into one sharded index written to
+    ``out``: each path's stage-1 ``tokenized`` frame is read and the union
+    goes through the one block encoder, so the result is the index a
+    single build over the union would write. The positional layout follows
+    the segments' schema; mixing positional and plain segments is an
+    error. ``n_shards=None`` → the docs-per-shard policy. The written
+    index has no ``tokenized/`` of its own, so it is not a segment: a
+    later merge takes the original segments again."""
+    if not paths:
         raise ValueError("no segments to merge")
-    postings = _union_all([s.postings for s in segments])
-    docs = _union_all([s.docs for s in segments])
-    doc_stats = _union_all([s.doc_stats for s in segments])
-
-    stats = doc_stats.agg(
-        F.count("*").alias("n_docs"), F.avg("doc_len").alias("avgdl")
-    )
-    # df re-sums across segments (a term can appear in many); idf needs the
-    # merged N, so it is recomputed, not unioned.
-    term_stats = (
-        _union_all([s.term_stats.select("term", "df") for s in segments])
-        .groupBy("term")
-        .agg(F.sum("df").alias("df"))
-        .crossJoin(F.broadcast(stats.select("n_docs")))
-        .select(
-            "term",
-            "df",
-            F.greatest(
-                F.lit(0.0),
-                F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-            ).alias("idf"),
+    segments = [checkpoint.read_tokenized(spark, p) for p in paths]
+    layouts = {
+        "npos" in seg.schema["tf_terms"].dataType.elementType.names
+        for seg in segments
+    }
+    if len(layouts) > 1:
+        raise ValueError(
+            "cannot merge positional and plain segments: rebuild them with "
+            "one layout"
         )
+    return shards_mod.shard_and_write_from_tokenized(
+        spark, _union_all(segments), out,
+        n_shards=n_shards, with_positions=layouts.pop(),
     )
-    return IndexTables(
-        docs=docs,
-        postings=postings,
-        doc_stats=doc_stats,
-        term_stats=term_stats,
-        stats=stats,
-    )
+
+
+def _decode_group(g: pd.DataFrame, with_positions: bool) -> dict:
+    """One (shard, term) group's blocks → per-posting columns in block
+    order: docno, tf, doc_len, flags and, for positional layouts, one
+    position array per posting. A block without a flag stream (pre-flag
+    segment) contributes the UNKNOWN sentinel per posting, never
+    fabricated zeros."""
+    rows = list(g.itertuples())
+    parts = [codec.decode_postings(r.gaps, r.tfs, r.dls) for r in rows]
+    cols = {
+        "docno": np.concatenate([p[0].astype(np.int64) for p in parts]),
+        "tf": np.concatenate([p[1] for p in parts]),
+        "doc_len": np.concatenate([p[2] for p in parts]),
+        "flags": np.concatenate([
+            codec.varint_decode(r.fls).astype(np.int64)
+            if len(getattr(r, "fls", b"")) > 0
+            else np.full(p[0].size, shards_mod.FLAG_UNKNOWN, dtype=np.int64)
+            for r, p in zip(rows, parts)
+        ]),
+    }
+    if with_positions:
+        plists: list[np.ndarray] = []
+        for r in rows:
+            counts, flat_pos = codec.decode_positions(r.pcounts, r.pgaps)
+            plists.extend(np.split(flat_pos.astype(np.int64), np.cumsum(counts)[:-1]))
+        cols["positions"] = plists
+    return cols
 
 
 def merge_block_segments(
@@ -117,33 +143,10 @@ def merge_block_segments(
         else:
             passthrough = None
         for (shard, term), g in pdf.groupby(["shard", "term"], sort=False):
-            parts = [codec.decode_postings(r.gaps, r.tfs, r.dls) for r in g.itertuples()]
-            # carry the boost-bound flag stream through the re-encode; a
-            # source block without one (pre-flag segment) contributes the
-            # UNKNOWN sentinel per posting, never fabricated zeros
-            flags = [
-                codec.varint_decode(r.fls).astype(np.int64)
-                if len(getattr(r, "fls", b"")) > 0
-                else np.full(p[0].size, shards_mod.FLAG_UNKNOWN, dtype=np.int64)
-                for r, p in zip(g.itertuples(), parts)
-            ]
-            cols = {
-                "shard": int(shard),
-                "term": term,
-                "docno": np.concatenate([p[0].astype(np.int64) for p in parts]),
-                "tf": np.concatenate([p[1] for p in parts]),
-                "doc_len": np.concatenate([p[2] for p in parts]),
-                "flags": np.concatenate(flags),
-            }
-            if with_positions:
-                plists: list[np.ndarray] = []
-                for r in g.itertuples():
-                    counts, flat_pos = codec.decode_positions(r.pcounts, r.pgaps)
-                    plists.extend(
-                        np.split(flat_pos.astype(np.int64), np.cumsum(counts)[:-1])
-                    )
-                cols["positions"] = plists
-            frames.append(pd.DataFrame(cols))
+            frames.append(pd.DataFrame({
+                "shard": int(shard), "term": term,
+                **_decode_group(g, with_positions),
+            }))
         if not frames:
             encoded = pd.DataFrame(columns=out_cols)
         else:
@@ -372,35 +375,17 @@ def apply_tombstones(
         for (shard, term, run), g in dirty.groupby(
             ["shard", "term", "_crun"], sort=False
         ):
-            parts = [codec.decode_postings(r.gaps, r.tfs, r.dls) for r in g.itertuples()]
-            flags = [
-                codec.varint_decode(r.fls).astype(np.int64)
-                if len(getattr(r, "fls", b"")) > 0
-                else np.full(p[0].size, shards_mod.FLAG_UNKNOWN, dtype=np.int64)
-                for r, p in zip(g.itertuples(), parts)
-            ]
-            docno = np.concatenate([p[0].astype(np.int64) for p in parts])
-            keep = ~np.isin(docno, kill)
+            cols = _decode_group(g, with_positions)
+            keep = ~np.isin(cols["docno"], kill)
             if not keep.any():
                 continue
-            cols = {
-                "shard": int(shard),
-                "term": term,
-                "_crun": int(run),
-                "docno": docno[keep],
-                "tf": np.concatenate([p[1] for p in parts])[keep],
-                "doc_len": np.concatenate([p[2] for p in parts])[keep],
-                "flags": np.concatenate(flags)[keep],
-            }
-            if with_positions:
-                plists: list[np.ndarray] = []
-                for r in g.itertuples():
-                    counts, flat_pos = codec.decode_positions(r.pcounts, r.pgaps)
-                    plists.extend(
-                        np.split(flat_pos.astype(np.int64), np.cumsum(counts)[:-1])
-                    )
-                cols["positions"] = [p for p, k in zip(plists, keep) if k]
-            frames.append(pd.DataFrame(cols))
+            positions = cols.pop("positions", None)
+            cols = {c: v[keep] for c, v in cols.items()}
+            if positions is not None:
+                cols["positions"] = [p for p, k in zip(positions, keep) if k]
+            frames.append(pd.DataFrame({
+                "shard": int(shard), "term": term, "_crun": int(run), **cols,
+            }))
         parts_out = []
         if len(clean):
             parts_out.append(clean[out_cols])

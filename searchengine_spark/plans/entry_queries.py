@@ -1918,23 +1918,28 @@ SQL_BM25_SERVING = _build_serving_sql(stemmed_oracle_path(STEMMED_ORACLE_SF_DIR)
 
 # ------------------------------------------------------ segment-merge oracle
 def q_bm25_merged_topk(spark, sf_dir) -> DataFrame:
-    """Segment merge under the hash gate: the corpus is built as TWO
+    """Segment merge under the hash gate: the corpus is tokenized as TWO
     disjoint half-segments (even/odd doc_id — the checkpoint-chunk /
-    snapshot-increment shape, operators/merge.py) and logically merged
-    (pure union of postings/docs, df re-summed per term, idf/avgdl
-    recomputed from merged totals); the full-corpus stemmed twin
-    (SQL_BM25_STEMMED_TOPK) must then hash-match — merge ≡ build-from-
-    union checked by an independent engine, not just the pytest
-    associativity property."""
+    streamed-batch shape, operators/merge.py), merged through the one
+    block encoder (merge.merge_segments) and served by block-max WAND; the
+    full-corpus stemmed twin (SQL_BM25_STEMMED_TOPK) must then hash-match
+    — merge ≡ build-from-union checked by an independent engine, not just
+    the pytest property."""
     from searchengine_spark.operators import merge
-    from searchengine_spark.plans.bm25 import BM25SearchEngine
-    from searchengine_spark.plans.text_only import build_text_only_index
+    from searchengine_spark.plans.text_only import tokenize_text_documents
+    from searchengine_spark.plans.wand import WandSearchEngine
 
     docs = _documents(spark, sf_dir)
-    seg_a = build_text_only_index(spark, docs.filter(F.col("doc_id") % 2 == 0))
-    seg_b = build_text_only_index(spark, docs.filter(F.col("doc_id") % 2 == 1))
-    tables = merge.merge_index_tables(spark, [seg_a, seg_b])
-    engine = BM25SearchEngine(spark, tables)
+    root = _scratch_dir(sf_dir, "bm25_merged_topk")
+    segs = []
+    for half in (0, 1):
+        seg = f"{root}/seg{half}"
+        tokenize_text_documents(docs.filter(F.col("doc_id") % 2 == half)).write.mode(
+            "overwrite"
+        ).parquet(f"{seg}/tokenized")
+        segs.append(seg)
+    merged = merge.merge_segments(spark, segs, f"{root}/merged", n_shards=8)
+    engine = WandSearchEngine(spark, merged)
     res = engine.search_batch([(0, STEMMED_QUERY)], top_k=10, with_metadata=False)
     return res.select("rank", "doc_id", F.round("score", 6).alias("score"))
 

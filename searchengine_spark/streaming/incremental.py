@@ -5,18 +5,20 @@ pages already on disk" (crawler.py:210-219) — i.e. *new pages extend the
 corpus; old pages are never reprocessed*. The Spark-native expression of
 that contract is a Structured Streaming job over the input table's arrivals:
 
-    new web_pages files → foreachBatch → build a doc-disjoint index
-    *segment* per micro-batch → segments merge into the serving index
-    (operators/merge.py)
+    new web_pages files → foreachBatch → stage-1 tokenize into a
+    doc-disjoint *segment* per micro-batch (``{seg}/tokenized``) →
+    ``merge.merge_segments`` encodes the segments into one sharded
+    serving index (operators/merge.py)
+
+A segment is the stage-1 ``tokenized`` frame only — the same frame every
+``cli build`` output carries — so streamed segments and built indexes
+merge through the one block encoder into the one on-disk format.
 
 ``availableNow`` triggers make the same job run as a catch-up batch
 (process everything new, then stop) — which is how a periodic 10^12-doc
 ingest actually operates; the streaming checkpoint gives exactly-once
 segment production across restarts (complementing the chunk-level
 checkpointing of full rebuilds in operators/checkpoint.py).
-
-Segments written here are the same shape as any other segment, so the
-multi-pass merge and its associativity guarantees apply unchanged.
 """
 
 from __future__ import annotations
@@ -32,7 +34,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from searchengine_spark.operators import index_build, merge
+from searchengine_spark.operators import index_build
 
 WEB_PAGES_SCHEMA = StructType(
     [
@@ -45,35 +47,25 @@ WEB_PAGES_SCHEMA = StructType(
 )
 
 
-def run_incremental(
-    spark: SparkSession,
-    input_dir: str,
-    work_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> list[str]:
-    """Process all unseen input files into index segments; returns the list
-    of all segment paths (previous + new). Restart-safe: the streaming
-    checkpoint under ``{work_dir}/_checkpoint`` remembers consumed files."""
-    reader = (
+def run_incremental(spark: SparkSession, input_dir: str, work_dir: str) -> list[str]:
+    """Tokenize all unseen input files into segments; returns the list of
+    all complete segment paths (previous + new). Restart-safe: the
+    streaming checkpoint under ``{work_dir}/_checkpoint`` remembers
+    consumed files, and a batch re-run after a kill overwrites its own
+    segment."""
+    stream = (
         spark.readStream.schema(WEB_PAGES_SCHEMA)
         .option("latestFirst", "false")
+        .parquet(input_dir)
     )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(input_dir)
-
     seg_root = os.path.join(work_dir, "segments")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        seg = os.path.join(seg_root, f"batch={batch_id}")
-        tokenized = index_build.tokenize_documents(batch_df)
-        tokenized.write.mode("overwrite").parquet(f"{seg}/tokenized")
-        spark_l = batch_df.sparkSession
-        tok = spark_l.read.parquet(f"{seg}/tokenized")
-        if tok.limit(1).count() == 0:
+        if batch_df.isEmpty():
             return
-        tables = index_build.build_index_tables(tok)
-        index_build.write_index(tables, seg, postings_partitions=8)
+        index_build.tokenize_documents(batch_df).write.mode("overwrite").parquet(
+            os.path.join(seg_root, f"batch={batch_id}", "tokenized")
+        )
 
     q = (
         stream.writeStream.foreachBatch(process_batch)
@@ -86,20 +78,13 @@ def run_incremental(
 
 
 def segment_paths(work_dir: str) -> list[str]:
+    """Complete segments (their ``tokenized/_SUCCESS`` exists), in name
+    order."""
     seg_root = os.path.join(work_dir, "segments")
     if not os.path.isdir(seg_root):
         return []
-    out = []
-    for d in sorted(os.listdir(seg_root)):
-        if os.path.exists(os.path.join(seg_root, d, "stats")):
-            out.append(os.path.join(seg_root, d))
-    return out
-
-
-def merged_index(spark: SparkSession, work_dir: str):
-    """Serving view: all segments merged into one logical IndexTables."""
-    paths = segment_paths(work_dir)
-    if not paths:
-        raise FileNotFoundError(f"no completed segments under {work_dir}")
-    segments = [index_build.read_index(spark, p) for p in paths]
-    return merge.merge_index_tables(spark, segments)
+    return [
+        os.path.join(seg_root, d)
+        for d in sorted(os.listdir(seg_root))
+        if os.path.exists(os.path.join(seg_root, d, "tokenized", "_SUCCESS"))
+    ]

@@ -1,8 +1,6 @@
 """Kill/resume checkpointing and multi-pass segment merge properties
 (SURVEY.md §5.4-5.5, north-rule resumability + merge clauses)."""
 
-import math
-
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -82,36 +80,15 @@ def tokenized(pages):
     return index_build.tokenize_documents(pages).cache()
 
 
-@pytest.fixture(scope="module")
-def full_and_segments(spark, tokenized):
-    full = index_build.build_index_tables(tokenized)
-    segs = [
-        index_build.build_index_tables(
-            tokenized.withColumn("_s", _seg_col()).filter(F.col("_s") == i).drop("_s")
-        )
-        for i in range(3)
-    ]
-    return full, segs
-
-
-def test_logical_merge_equals_direct_build(spark, full_and_segments):
-    full, segs = full_and_segments
-    merged = merge.merge_index_tables(spark, segs)
-
-    want = {(r["term"], r["doc_id"]): r["tf"] for r in full.postings.collect()}
-    got = {(r["term"], r["doc_id"]): r["tf"] for r in merged.postings.collect()}
-    assert got == want
-
-    w = {r["term"]: (r["df"], r["idf"]) for r in full.term_stats.collect()}
-    g = {r["term"]: (r["df"], r["idf"]) for r in merged.term_stats.collect()}
-    assert g.keys() == w.keys()
-    for t in w:
-        assert g[t][0] == w[t][0], t
-        assert math.isclose(g[t][1], w[t][1], rel_tol=1e-12), t
-
-    sw, sg = full.stats.collect()[0], merged.stats.collect()[0]
-    assert sg["n_docs"] == sw["n_docs"]
-    assert math.isclose(sg["avgdl"], sw["avgdl"], rel_tol=1e-12)
+def test_merge_segments_rejects_mixed_layouts(spark, pages, tmp_path_factory):
+    """A positional and a plain segment have no common block layout."""
+    root = str(tmp_path_factory.mktemp("mixed"))
+    for name, with_positions in (("plain", False), ("pos", True)):
+        index_build.tokenize_documents(
+            pages.limit(3), with_positions=with_positions
+        ).write.parquet(f"{root}/{name}/tokenized")
+    with pytest.raises(ValueError, match="positional and plain"):
+        merge.merge_segments(spark, [f"{root}/plain", f"{root}/pos"], f"{root}/out")
 
 
 def _decoded(blocks_df) -> pd.DataFrame:

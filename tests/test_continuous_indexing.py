@@ -1,15 +1,16 @@
 """End-to-end continuous-indexing lifecycle over the full operator stack:
 
     streamed arrivals → tokenized segments (streaming/incremental.py)
-    → sharded compressed serving index (operators/shards.py)
+    → segment merge into the sharded compressed serving index
+      (operators/merge.py:merge_segments → operators/shards.py)
     → atomic publish (operators/manifest.py) → WAND serving (plans/wand.py)
     → live tombstone-mask delete (operators/tombstones.py)
     → selective compaction (operators/merge.py) → publish → rollback.
 
 Each stage is property-tested in its own suite; this test drives the whole
 operational loop a production index actually runs, asserting the
-integration seams: segment tokenized output feeds the sharded builder
-unchanged, the incrementally-grown index answers queries rank+score
+integration seams: streamed segments merge through the one sharded
+encoder, the incrementally-grown index answers queries rank+score
 identical to a from-scratch build of the same corpus, deletes are live
 before any rewrite, and the manifest serves the right artifact at every
 step. Reference analog: the crawl → rebuild-pickle → restart-Flask loop
@@ -35,15 +36,6 @@ def _ranked(df):
     ]
 
 
-def _segments_tokenized(spark, work):
-    segs = incremental.segment_paths(work)
-    tok = None
-    for seg in segs:
-        t = spark.read.parquet(f"{seg}/tokenized")
-        tok = t if tok is None else tok.unionByName(t)
-    return tok
-
-
 def test_full_lifecycle(spark, tmp_path):
     input_dir = str(tmp_path / "arrivals")
     work = str(tmp_path / "stream_work")
@@ -56,10 +48,9 @@ def test_full_lifecycle(spark, tmp_path):
 
     # ---- arrival 1: stream → segments → sharded v1 → publish ----------
     first.coalesce(2).write.mode("append").parquet(input_dir)
-    incremental.run_incremental(spark, input_dir, work)
     v1 = str(tmp_path / "v1")
-    idx1 = shards.shard_and_write_from_tokenized(
-        spark, _segments_tokenized(spark, work), v1, n_shards=4
+    idx1 = merge.merge_segments(
+        spark, incremental.run_incremental(spark, input_dir, work), v1, n_shards=4
     )
     assert idx1.n_docs == first.count()
     manifest.publish(serving, v1, label="arrival-1")
@@ -72,10 +63,9 @@ def test_full_lifecycle(spark, tmp_path):
 
     # ---- arrival 2: only NEW files process; grown index ≡ fresh build --
     second.coalesce(2).write.mode("append").parquet(input_dir)
-    incremental.run_incremental(spark, input_dir, work)
     v2 = str(tmp_path / "v2")
-    idx2 = shards.shard_and_write_from_tokenized(
-        spark, _segments_tokenized(spark, work), v2, n_shards=4
+    idx2 = merge.merge_segments(
+        spark, incremental.run_incremental(spark, input_dir, work), v2, n_shards=4
     )
     assert idx2.n_docs == N_DOCS
     manifest.publish(serving, v2, label="arrival-2")

@@ -7,7 +7,9 @@ in-memory logical spec (``index_build.build_index``) built directly from
 the corpus — and the exhaustive BM25 engine over the exported tables is
 rank-identical to WAND over the blocks they came from. The same 400-doc,
 4-shard build also pins co-sharded docs, kill/resume identity and
-head-term skew; tiny-corpus and fractional-boost edges close the file.
+head-term skew; tiny-corpus and fractional-boost edges follow, and the
+CLI test closes the file: build → verify → merge of two half builds →
+query, rank-identical to the whole-corpus build.
 """
 
 import pandas as pd
@@ -182,19 +184,31 @@ def test_head_term_skew_is_neutralized(sharded):
 
 def test_cli_build_verify_query_export(spark, tmp_path, capsys):
     """CLI over the one build path: `build` writes the sharded index and
-    `verify` checks it (and fails on a corrupted meta.json); `query` picks
-    WAND for the sharded index and exhaustive BM25 for its `export`, and
-    both rank the same docs."""
+    `verify` checks it (and fails on a corrupted meta.json). Two `build`
+    outputs over doc-disjoint halves `merge` into one sharded index that
+    `verify` accepts and `query` (WAND) ranks exactly like the
+    whole-corpus build."""
     import json
+
+    from pyspark.sql import functions as F
 
     from searchengine_spark import cli
 
     pages_path = str(tmp_path / "pages")
     webgen.generate_spark(spark, 120, partitions=2).write.parquet(pages_path)
-    idx, logical = str(tmp_path / "idx"), str(tmp_path / "logical")
+    idx, merged = str(tmp_path / "idx"), str(tmp_path / "merged")
     assert cli.main(["build", "--input", pages_path, "--out", idx, "--shards", "2"]) == 0
     assert cli.main(["verify", "--index", idx]) == 0
-    assert cli.main(["export", "--index", idx, "--out", logical, "--partitions", "2"]) == 0
+    segs = []
+    for half in (0, 1):
+        half_pages, seg = str(tmp_path / f"pages{half}"), str(tmp_path / f"seg{half}")
+        spark.read.parquet(pages_path).filter(F.crc32("url") % 2 == half).write.parquet(
+            half_pages
+        )
+        assert cli.main(["build", "--input", half_pages, "--out", seg]) == 0
+        segs.append(seg)
+    assert cli.main(["merge", "--segments", *segs, "--out", merged]) == 0
+    assert cli.main(["verify", "--index", merged]) == 0
     capsys.readouterr()
 
     queries = [q for _, q in webgen.reference_queries()[:4]]
@@ -208,7 +222,7 @@ def test_cli_build_verify_query_export(spark, tmp_path, capsys):
 
     got = ranks(idx)
     assert got, "query returned no results"
-    assert got == ranks(logical)
+    assert got == ranks(merged)
 
     with open(f"{idx}/meta.json") as f:
         meta = json.load(f)
