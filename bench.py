@@ -543,10 +543,8 @@ def run_delete_bench(cpus: int = CPUS, n_docs: int = N_DOCS) -> dict:
     * masked_first / masked_steady vs unmasked — 21-query WAND batch with a
       100-doc mask: the first batch pays the one-off df-correction job,
       steady state is the memoized mask shipped with the kernels;
-    * compact_selective vs compact_full — apply_tombstones on the
-      bounds-carrying layout (decode only blocks whose docno range hits the
-      kill set) vs the pre-bounds full re-encode of every block, same
-      100-doc kill set.
+    * compact_selective — apply_tombstones with the same 100-doc kill set
+      (decodes only blocks whose docno range hits the kill set).
     """
     import numpy as np
 
@@ -618,16 +616,6 @@ def run_delete_bench(cpus: int = CPUS, n_docs: int = N_DOCS) -> dict:
     )
     out["compact_selective"] = round(time.time() - t0, 3)
 
-    import dataclasses
-
-    legacy = dataclasses.replace(index, has_block_bounds=False)
-    t0 = time.time()
-    merge.apply_tombstones(
-        spark, legacy, kill100,
-        out_path=os.path.join(BENCH_DIR, "compact_full"),
-    )
-    out["compact_full"] = round(time.time() - t0, 3)
-
     return {
         "metric": "delete_path",
         "value": out["masked_steady"],
@@ -637,9 +625,6 @@ def run_delete_bench(cpus: int = CPUS, n_docs: int = N_DOCS) -> dict:
         "cpus": cpus,
         "masked_overhead_steady_pct": round(
             100 * (out["masked_steady"] / out["unmasked_steady"] - 1), 1
-        ),
-        "selective_speedup": round(
-            out["compact_full"] / out["compact_selective"], 2
         ),
         "results": {"unmasked": n_plain, "masked": n_masked},
     }

@@ -229,14 +229,19 @@ def cmd_linkrank(args) -> int:
 
 def cmd_verify(args) -> int:
     """Sharded-index integrity (reference verify_index.py:23-89 analog):
-    ``meta.json`` n_docs == docs_sharded rows, blocks non-empty, and
-    Σ n over posting blocks == Σ df in term_stats."""
+    the block layout is the current one, ``meta.json`` n_docs ==
+    docs_sharded rows, blocks non-empty, and Σ n over posting blocks ==
+    Σ df in term_stats."""
     from pyspark.sql import functions as F
 
     from searchengine_spark.operators import shards
 
     spark = _spark(args)
-    index = shards.read_sharded_index(spark, args.index)
+    try:
+        index = shards.read_sharded_index(spark, args.index)
+    except ValueError as e:
+        print(json.dumps({"ok": False, "error": str(e)}))
+        return 1
     postings = index.blocks.filter(~F.col("term").startswith("\x00"))
     checks = {
         "n_docs": index.n_docs,

@@ -1,12 +1,10 @@
-"""Segment merge for the inverted index.
+"""Segment merge and tombstone compaction for the sharded index.
 
 A *segment* is an index built over a disjoint subset of the corpus (e.g.
 one checkpoint chunk, one streamed micro-batch, one day of crawl). The
 reference has no segments — it rebuilds the whole pickle in RAM
 (indexer.py:109-167); a 10^12-doc index is necessarily built as segments
-that are merged in passes (the classic Lucene/inverted-file strategy).
-
-Two levels:
+and merged.
 
 * **segment merge** (:func:`merge_segments`) — the stage-1 ``tokenized``
   frames of doc-disjoint segments (every ``cli build`` output and every
@@ -15,17 +13,10 @@ Two levels:
   dense in global doc_id order and ``shard = docno // shard_size``, so
   segments written apart share no docno space; the encoder's re-encode
   assigns one without re-running stage-1 extraction, the build's dominant
-  cost.
+  cost. Segments that share a doc_id are refused.
 
-* **block merge** (:func:`merge_block_segments`) — segment posting-*block*
-  tables (operators/shards.py layout, shared docno space) → one block
-  table: union → repartition by (shard, term) → per-group decode,
-  merge-sort by docno, re-encode fresh blocks. One shuffle per pass;
-  ``applyInPandas`` groups are bounded by shard size, so head terms cannot
-  blow up a task (same skew argument as the build).
-
-Property-tested: merge(A,B,C) ≡ merge(merge(A,B),C) ≡ build-from-union
-(SURVEY.md §5.4 merge associativity).
+* **tombstone compaction** (:func:`apply_tombstones`) — deletes docs from
+  a written index by re-encoding only the posting blocks that hold them.
 """
 
 from __future__ import annotations
@@ -40,7 +31,7 @@ from pyspark.sql import functions as F
 from searchengine_spark import config
 from searchengine_spark.operators import checkpoint, codec
 from searchengine_spark.operators import shards as shards_mod
-from searchengine_spark.operators.shards import BLOCK_POS_SCHEMA, BLOCK_SCHEMA, DEFAULT_BLOCK_SIZE
+from searchengine_spark.operators.shards import BLOCK_POS_SCHEMA, BLOCK_SCHEMA
 
 
 def _union_all(dfs: list[DataFrame]) -> DataFrame:
@@ -73,6 +64,24 @@ def merge_segments(
             "cannot merge positional and plain segments: rebuild them with "
             "one layout"
         )
+    # a doc in two segments would get two docnos and count twice in n_docs;
+    # one aggregation over the doc_id column finds a shared doc
+    shared = (
+        _union_all([
+            seg.select("doc_id", F.lit(i).alias("_seg"))
+            for i, seg in enumerate(segments)
+        ])
+        .groupBy("doc_id")
+        .agg(F.min("_seg").alias("lo"), F.max("_seg").alias("hi"))
+        .filter(F.col("lo") < F.col("hi"))
+        .limit(1)
+        .collect()
+    )
+    if shared:
+        raise ValueError(
+            f"segments are not doc-disjoint: doc_id {shared[0]['doc_id']} is "
+            f"in segments {paths[shared[0]['lo']]} and {paths[shared[0]['hi']]}"
+        )
     return shards_mod.shard_and_write_from_tokenized(
         spark, _union_all(segments), out,
         n_shards=n_shards, with_positions=layouts.pop(),
@@ -82,21 +91,16 @@ def merge_segments(
 def _decode_group(g: pd.DataFrame, with_positions: bool) -> dict:
     """One (shard, term) group's blocks → per-posting columns in block
     order: docno, tf, doc_len, flags and, for positional layouts, one
-    position array per posting. A block without a flag stream (pre-flag
-    segment) contributes the UNKNOWN sentinel per posting, never
-    fabricated zeros."""
+    position array per posting."""
     rows = list(g.itertuples())
     parts = [codec.decode_postings(r.gaps, r.tfs, r.dls) for r in rows]
     cols = {
         "docno": np.concatenate([p[0].astype(np.int64) for p in parts]),
         "tf": np.concatenate([p[1] for p in parts]),
         "doc_len": np.concatenate([p[2] for p in parts]),
-        "flags": np.concatenate([
-            codec.varint_decode(r.fls).astype(np.int64)
-            if len(getattr(r, "fls", b"")) > 0
-            else np.full(p[0].size, shards_mod.FLAG_UNKNOWN, dtype=np.int64)
-            for r, p in zip(rows, parts)
-        ]),
+        "flags": np.concatenate(
+            [codec.varint_decode(r.fls).astype(np.int64) for r in rows]
+        ),
     }
     if with_positions:
         plists: list[np.ndarray] = []
@@ -105,94 +109,6 @@ def _decode_group(g: pd.DataFrame, with_positions: bool) -> dict:
             plists.extend(np.split(flat_pos.astype(np.int64), np.cumsum(counts)[:-1]))
         cols["positions"] = plists
     return cols
-
-
-def merge_block_segments(
-    segments: list[DataFrame],
-    avgdl: float,
-    block_size: int = DEFAULT_BLOCK_SIZE,
-) -> DataFrame:
-    """Merge posting-block tables (shared docno space, doc-disjoint
-    segments) into one re-blocked table. One shuffle by (shard,
-    term-bucket) — the groupBy below induces it; nothing else may add one."""
-    u = _union_all(segments)
-    with_positions = "pcounts" in u.columns
-
-    def regroup(pdf: pd.DataFrame) -> pd.DataFrame:
-        frames = []
-        # "\x00"-prefixed pseudo-terms (the field-signature sidecar,
-        # functions/fieldsig.py) pass through VERBATIM as already-encoded
-        # block rows: their streams are not (tf, doc_len) postings, segments
-        # are doc-disjoint so per-segment rows stay valid side by side, and
-        # readers concatenate by docno. Only block_no is renumbered (docno
-        # order) for a deterministic layout.
-        out_cols = (
-            shards_mod._BLOCK_POS_COLS if with_positions else shards_mod._BLOCK_COLS
-        )
-        pseudo = pdf["term"].str.startswith("\x00")
-        passthrough = pdf[pseudo]
-        if len(passthrough):
-            passthrough = passthrough.sort_values(
-                ["shard", "term", "min_docno"], kind="stable"
-            ).copy()
-            passthrough["block_no"] = passthrough.groupby(
-                ["shard", "term"], sort=False
-            ).cumcount()
-            passthrough = passthrough[out_cols]
-            pdf = pdf[~pseudo]
-        else:
-            passthrough = None
-        for (shard, term), g in pdf.groupby(["shard", "term"], sort=False):
-            frames.append(pd.DataFrame({
-                "shard": int(shard), "term": term,
-                **_decode_group(g, with_positions),
-            }))
-        if not frames:
-            encoded = pd.DataFrame(columns=out_cols)
-        else:
-            flat = pd.concat(frames, ignore_index=True)
-            encoded = shards_mod.encode_blocks_pdf(
-                flat, avgdl, block_size, with_positions
-            )
-        if passthrough is not None:
-            encoded = pd.concat(
-                [encoded[out_cols] if len(encoded) else encoded, passthrough],
-                ignore_index=True,
-            )
-        return encoded
-
-    # same coarse grouping as the build: (shard, term-bucket), per-term
-    # split inside the kernel (see operators/shards.py)
-    return (
-        u.withColumn(
-            "_tb", F.pmod(F.xxhash64("term"), F.lit(shards_mod.TERM_BUCKETS))
-        )
-        .groupBy("shard", "_tb")
-        .applyInPandas(
-            lambda pdf: regroup(pdf.drop(columns=["_tb"])),
-            BLOCK_POS_SCHEMA if with_positions else BLOCK_SCHEMA,
-        )
-    )
-
-
-def multi_pass_merge(
-    segments: list[DataFrame],
-    avgdl: float,
-    block_size: int = DEFAULT_BLOCK_SIZE,
-    fan_in: int = 2,
-) -> DataFrame:
-    """Merge many segments in passes of ``fan_in`` (bounds per-pass shuffle
-    width; at 10^12 docs segment counts reach thousands and a single
-    all-way union would shuffle everything at once)."""
-    runs = list(segments)
-    while len(runs) > 1:
-        runs = [
-            merge_block_segments(runs[i : i + fan_in], avgdl, block_size)
-            if len(runs[i : i + fan_in]) > 1
-            else runs[i]
-            for i in range(0, len(runs), fan_in)
-        ]
-    return runs[0]
 
 
 def apply_tombstones(
@@ -208,14 +124,13 @@ def apply_tombstones(
 
     ``tombstones`` is any frame with a ``doc_id`` column. The pass is a
     per-(shard, term-bucket) walk over the block table (the SAME group
-    granularity as the build and :func:`merge_block_segments`, so a delete
-    task is bounded by ~1/TERM_BUCKETS of a shard — never a whole shard,
-    never a whole head-term posting list); the kill set is replicated
-    across a shard's buckets (TERM_BUCKETS small int rows per tombstone).
+    granularity as the build, so a delete task is bounded by
+    ~1/TERM_BUCKETS of a shard — never a whole shard, never a whole
+    head-term posting list); the kill set is replicated across a shard's
+    buckets (TERM_BUCKETS small int rows per tombstone).
 
-    **Selective rewrite** (indexes carrying the avgdl-free (max_tf, min_dl)
-    block bounds): only blocks whose docnos intersect the kill set are
-    decoded and re-encoded — every other block passes through with its
+    **Selective rewrite**: only blocks whose docnos intersect the kill set
+    are decoded and re-encoded — every other block passes through with its
     posting streams BYTE-IDENTICAL (property-tested), paying a searchsorted
     range check and, for range-overlapping blocks, one gaps decode. A
     100-doc takedown on a 10^12-doc index therefore rewrites ~100 blocks,
@@ -228,9 +143,7 @@ def apply_tombstones(
     monotonicity in tf and dl), rewritten blocks get the exact block max.
     Scoring never reads ``max_partial``, so querying the compacted index is
     rank- and score-identical to a fresh build of the surviving corpus
-    (property-tested). Pre-bounds layouts fall back to the full
-    decode-and-re-encode of every block (round-2 behavior). Surviving
-    docnos keep their values — scores never depend on docno, and holes in
+    (property-tested). Surviving docnos keep their values — scores never depend on docno, and holes in
     the docno space are fine (shard membership is unchanged, so
     doc-disjointness and the per-shard top-k merge argument still hold).
 
@@ -253,13 +166,7 @@ def apply_tombstones(
 
     if block_size is None:
         block_size = index.block_size
-    if "doc_len" not in index.docs.columns:
-        raise ValueError(
-            "apply_tombstones needs doc_len in docs_sharded (pre-doc_len "
-            "layout: export + rebuild the index first, see shards.export_index)"
-        )
     with_positions = index.with_positions
-    selective = bool(getattr(index, "has_block_bounds", False))
     tomb_ids = tombstones.select("doc_id").distinct()
     docs2 = index.docs.join(tomb_ids, "doc_id", "left_anti")
     st = docs2.agg(
@@ -269,7 +176,7 @@ def apply_tombstones(
     ).collect()[0]
     n_docs2 = int(st["n_docs"])
     avgdl2 = float(st["avgdl"]) if st["avgdl"] is not None else 0.0
-    sum_dl2 = int(st["sum_doc_len"]) if st["sum_doc_len"] is not None else None
+    sum_dl2 = int(st["sum_doc_len"] or 0)
     tomb = index.docs.join(tomb_ids, "doc_id").select("shard", "docno")
     out_cols = shards_mod._BLOCK_POS_COLS if with_positions else shards_mod._BLOCK_COLS
 
@@ -332,45 +239,38 @@ def apply_tombstones(
         # check (sorted kill + searchsorted on block min/max) clears most
         # blocks without touching bytes; only range-overlapping blocks pay
         # a gaps decode for the precise membership test.
-        if selective and len(bpdf):
-            touched = np.zeros(len(bpdf), dtype=bool)
-            if kill.size:
-                lo = bpdf["min_docno"].to_numpy(dtype=np.int64)
-                hi = bpdf["max_docno"].to_numpy(dtype=np.int64)
-                i = np.searchsorted(kill, lo)
-                in_range = i < kill.size
-                nxt = kill[np.minimum(i, kill.size - 1)]
-                in_range &= nxt <= hi
-                gaps_col = bpdf.columns.get_loc("gaps")
-                for j in np.flatnonzero(in_range):
-                    d = np.cumsum(
-                        codec.varint_decode(bpdf.iat[j, gaps_col]), dtype=np.uint64
-                    ).astype(np.int64)
-                    touched[j] = bool(np.isin(d, kill).any())
-            clean = bpdf[~touched].copy()
-            # run id: dirty blocks of a term separated by a clean block must
-            # re-encode independently — pooling them would let a rewritten
-            # block span the clean block's docno range, breaking the
-            # same-term non-overlap invariant the WAND kernel's searchsorted
-            # pruning relies on. A global clean-count works as the run key:
-            # a term's rows are contiguous (sorted above), so the count only
-            # advances between two of its dirty rows when one of ITS clean
-            # blocks sits between them.
-            dirty = bpdf[touched].assign(_crun=np.cumsum(~touched)[touched])
-            if len(clean):
-                # refresh the avgdl-baked WAND bound arithmetically from the
-                # avgdl-free (max_tf, min_dl) metadata: a sound (if slightly
-                # looser) upper bound under the NEW avgdl — monotone in tf,
-                # antitone in dl — with no decode and no re-encode
-                mt = clean["max_tf"].to_numpy(dtype=np.float64)
-                md = clean["min_dl"].to_numpy(dtype=np.float64)
-                clean["max_partial"] = config.bm25_partial(mt, md, avgdl2)
-        else:
-            # pre-bounds layout: max_partial bakes the OLD avgdl and cannot
-            # be refreshed without a decode, so every block re-encodes
-            # (round-2 behavior) even in shards with no tombstones
-            clean = bpdf.iloc[0:0]
-            dirty = bpdf.assign(_crun=0)
+        touched = np.zeros(len(bpdf), dtype=bool)
+        if kill.size and len(bpdf):
+            lo = bpdf["min_docno"].to_numpy(dtype=np.int64)
+            hi = bpdf["max_docno"].to_numpy(dtype=np.int64)
+            i = np.searchsorted(kill, lo)
+            in_range = i < kill.size
+            nxt = kill[np.minimum(i, kill.size - 1)]
+            in_range &= nxt <= hi
+            gaps_col = bpdf.columns.get_loc("gaps")
+            for j in np.flatnonzero(in_range):
+                d = np.cumsum(
+                    codec.varint_decode(bpdf.iat[j, gaps_col]), dtype=np.uint64
+                ).astype(np.int64)
+                touched[j] = bool(np.isin(d, kill).any())
+        clean = bpdf[~touched].copy()
+        # run id: dirty blocks of a term separated by a clean block must
+        # re-encode independently — pooling them would let a rewritten
+        # block span the clean block's docno range, breaking the
+        # same-term non-overlap invariant the WAND kernel's searchsorted
+        # pruning relies on. A global clean-count works as the run key:
+        # a term's rows are contiguous (sorted above), so the count only
+        # advances between two of its dirty rows when one of ITS clean
+        # blocks sits between them.
+        dirty = bpdf[touched].assign(_crun=np.cumsum(~touched)[touched])
+        if len(clean):
+            # refresh the avgdl-baked WAND bound arithmetically from the
+            # avgdl-free (max_tf, min_dl) metadata: a sound (if slightly
+            # looser) upper bound under the NEW avgdl — monotone in tf,
+            # antitone in dl — with no decode and no re-encode
+            mt = clean["max_tf"].to_numpy(dtype=np.float64)
+            md = clean["min_dl"].to_numpy(dtype=np.float64)
+            clean["max_partial"] = config.bm25_partial(mt, md, avgdl2)
 
         for (shard, term, run), g in dirty.groupby(
             ["shard", "term", "_crun"], sort=False
@@ -441,7 +341,6 @@ def apply_tombstones(
         shard_size=index.shard_size,
         block_size=block_size,
         with_positions=with_positions,
-        has_flag_stream=index.has_flag_stream,
     )
     if out_path is None:
         return compacted

@@ -131,12 +131,10 @@ _BLOCK_POS_COLS = _BLOCK_COLS + ["pcounts", "pgaps"]
 # token (plans/bm25.py:boost_chain_expr, reference indexer.py:405-441). One
 # byte per posting buys the WAND phase-1 kernel a per-doc boost upper/lower
 # bound far tighter than the global MAX_BOOST=13.5, collapsing candidate
-# emission from O(match set) to O(k) per shard (plans/wand.py). Bit 3 is the
-# "unknown" sentinel used when a merged segment predates the flag stream.
+# emission from O(match set) to O(k) per shard (plans/wand.py).
 FLAG_TITLE = 1
 FLAG_DESC = 2
 FLAG_SNIPPET = 4
-FLAG_UNKNOWN = 8
 
 
 def _boost_flags_col(lt, ld, lc, term) -> "F.Column":
@@ -165,7 +163,8 @@ def encode_blocks_pdf(
     with_positions: bool = False,
     run_col: str | None = None,
 ) -> pd.DataFrame:
-    """(shard, term, docno, tf, doc_len[, positions]) rows → encoded block rows.
+    """(shard, term, docno, tf, doc_len, flags[, positions]) rows → encoded
+    block rows.
 
     Fully vectorized across the WHOLE frame (no per-term or per-block numpy
     calls — at 1M docs a term-bucket group holds ~10⁴ terms / ~10⁴ blocks,
@@ -250,12 +249,8 @@ def encode_blocks_pdf(
         "gaps": _block_slices(gaps.astype(np.uint64)),
         "tfs": _block_slices(tfs_u),
         "dls": _block_slices(dls_u),
-        # boost-bound flag stream (one byte/posting); an empty buffer marks a
-        # block built without flags — the WAND kernel treats it as UNKNOWN
-        # (falls back to the loose MAX_BOOST bound), never as all-zeros
-        "fls": _block_slices(pdf["flags"].to_numpy(dtype=np.int64).astype(np.uint64))
-        if "flags" in pdf.columns
-        else [b""] * len(bstarts),
+        # boost-bound flag stream (one byte/posting)
+        "fls": _block_slices(pdf["flags"].to_numpy(dtype=np.int64).astype(np.uint64)),
     }
     if with_positions:
         if "posv" in pdf.columns:
@@ -356,10 +351,15 @@ class ShardedIndex:
     """Physical index: compressed posting blocks + co-sharded doc metadata."""
 
     blocks: DataFrame  # BLOCK_SCHEMA (+ pcounts/pgaps when positional)
-    docs: DataFrame  # shard, docno, doc_id, url, title, description, content_snippet
+    # shard, docno, doc_id, url, title, description, content_snippet, doc_len
+    docs: DataFrame
     term_stats: DataFrame  # term, df, idf (global)
     n_docs: int
     avgdl: float
+    # exact Σ doc_len over the corpus: lets a tombstone mask derive the
+    # surviving avgdl exactly — (sum_doc_len − Σ killed doc_len) / surviving
+    # count — instead of reconstructing the sum from the rounded avgdl
+    sum_doc_len: int
     n_shards: int
     shard_size: int
     block_size: int
@@ -368,21 +368,6 @@ class ShardedIndex:
     # query engines probe docs_sharded/blocks directly with row-group
     # pruning instead of joining the whole table into the plan
     path: str | None = None
-    # False when the stored blocks predate the per-posting boost-flag
-    # stream: WAND's emission bounds then fall back to the loose global
-    # MAX_BOOST margin, so candidate volume is not O(k) per shard and the
-    # phase-2 broadcast gate must not trust the tight-bound assumption
-    has_flag_stream: bool = True
-    # False when the stored blocks predate the avgdl-free (max_tf, min_dl)
-    # block-bound columns: tombstone-masked queries and selective compaction
-    # then cannot recompute sound block bounds under a changed avgdl and
-    # must fall back to a full compaction rewrite
-    has_block_bounds: bool = True
-    # exact Σ doc_len over the corpus (None on legacy/in-memory-unknown
-    # layouts): lets a tombstone mask derive the surviving avgdl exactly —
-    # (sum_doc_len − Σ killed doc_len) / surviving count — instead of
-    # reconstructing the sum from the rounded stored avgdl
-    sum_doc_len: int | None = None
 
 
 def fieldsig_block_rows(sig_src: DataFrame, with_positions: bool = False) -> DataFrame:
@@ -395,15 +380,13 @@ def fieldsig_block_rows(sig_src: DataFrame, with_positions: bool = False) -> Dat
     docs, ``block_no`` = chunk index) per shard with ``term = SIG_TERM``
     holding the docs' 14-uint32 Bloom signatures — ``gaps`` is the standard
     delta-gapped docno stream (first gap absolute, per row), ``tfs`` the
-    doc-major interleave of the 14 words (32-bit values: exact through the
-    merge path's float64-mediated varint re-encode), ``dls``/``fls`` empty.
+    doc-major interleave of the 14 words, ``dls``/``fls`` empty.
     Chunking (not one shard-spanning row) keeps the sidecar compatible with
     WAND's phase-1 sub-range cells — see the SIG_CHUNK_DOCS note. The
     signature words are computed MAP-SIDE (Arrow batch UDF) so the
     per-shard exchange carries ~64 B/doc, not the ~350 B/doc of field
-    text. Merged segments keep their rows verbatim (operators/merge.py
-    passes pseudo-terms through), so a shard may carry several signature
-    rows beyond the chunking; readers concatenate by docno.
+    text. A shard carries several signature rows; readers concatenate
+    them by docno.
     """
     from searchengine_spark.functions import fieldsig
 
@@ -540,7 +523,7 @@ def shard_and_write_from_tokenized(
         F.sum("doc_len").cast("long").alias("sum_doc_len"),
     ).collect()[0]
     n_docs, avgdl = int(st["n_docs"]), float(st["avgdl"])
-    sum_doc_len = int(st["sum_doc_len"]) if st["sum_doc_len"] is not None else None
+    sum_doc_len = int(st["sum_doc_len"])
     if n_shards is None:
         n_shards = derive_n_shards(n_docs)
     shard_size = max(1, math.ceil(n_docs / n_shards))
@@ -687,30 +670,32 @@ def term_stats_from_blocks(blocks: DataFrame, n_docs: int) -> DataFrame:
 
 
 def read_sharded_index(spark: SparkSession, path: str) -> ShardedIndex:
+    """Re-read a written index. The one block layout is checked once: an
+    index without the ``fls`` flag stream, the (``max_tf``, ``min_dl``)
+    block bounds, ``docs_sharded.doc_len`` or ``meta.json`` ``sum_doc_len``
+    raises ValueError naming what is missing — the kernels, the tombstone
+    mask and compaction rely on all four."""
     with open(f"{path}/meta.json") as f:
         meta = json.load(f)
-    meta.setdefault("with_positions", False)
-    meta.setdefault("sum_doc_len", None)
     blocks = spark.read.parquet(f"{path}/blocks")
-    has_flags = "fls" in blocks.columns
-    if not has_flags:
-        # index written before the boost-bound flag stream existed: empty
-        # buffer = UNKNOWN, the kernel falls back to the MAX_BOOST bound
-        blocks = blocks.withColumn("fls", F.lit(b""))
-    has_bounds = "max_tf" in blocks.columns
-    if not has_bounds:
-        # pre-(max_tf, min_dl) layout: NULL bounds — readable, but masked
-        # queries / selective compaction refuse (see ShardedIndex fields)
-        blocks = blocks.withColumn(
-            "max_tf", F.lit(None).cast("int")
-        ).withColumn("min_dl", F.lit(None).cast("int"))
+    docs = spark.read.parquet(f"{path}/docs_sharded")
+    missing = [
+        f"blocks.{c}" for c in ("fls", "max_tf", "min_dl") if c not in blocks.columns
+    ]
+    if "doc_len" not in docs.columns:
+        missing.append("docs_sharded.doc_len")
+    if "sum_doc_len" not in meta:
+        missing.append("meta.json sum_doc_len")
+    if missing:
+        raise ValueError(
+            f"{path} is not a sharded index in the current block layout: "
+            f"missing {', '.join(missing)} (rebuild it)"
+        )
     return ShardedIndex(
-        has_block_bounds=has_bounds,
         blocks=blocks,
-        docs=spark.read.parquet(f"{path}/docs_sharded"),
+        docs=docs,
         term_stats=spark.read.parquet(f"{path}/term_stats"),
         path=path,
-        has_flag_stream=has_flags,
         **meta,
     )
 
@@ -836,19 +821,7 @@ def export_index(spark: SparkSession, index: ShardedIndex) -> "IndexTables":
     postings = decoded.join(mapping, "docno").select("term", "doc_id", "tf", "doc_len")
 
     docs = index.docs.select("doc_id", "url", "title", "description", "content_snippet")
-    if "doc_len" in index.docs.columns:
-        doc_stats = index.docs.select("doc_id", "doc_len")
-    else:
-        # pre-doc_len docs_sharded layouts: recover doc_len from any posting
-        # of the doc (identical across a doc's postings). Caveat: docs with
-        # zero postings (all tokens filtered) are absent from blocks, so
-        # this fallback misses them; current builds store doc_len in docs.
-        doc_stats = (
-            decoded.groupBy("docno")
-            .agg(F.first("doc_len").alias("doc_len"))
-            .join(mapping, "docno")
-            .select("doc_id", "doc_len")
-        )
+    doc_stats = index.docs.select("doc_id", "doc_len")
     stats = spark.createDataFrame(
         [(index.n_docs, float(index.avgdl))], "n_docs long, avgdl double"
     )

@@ -35,8 +35,7 @@ threshold. Two exchange-free-on-docs join modes, chosen by a size gate:
 * **broadcast** (small refined set): ``index.docs`` probes the broadcast
   candidates map-side — a BroadcastHashJoin whose streamed side is the
   docs scan;
-* **direct probe** (large refined set, or an index without the flag
-  stream, whose fallback bounds are loose): candidates repartition by
+* **direct probe** (large refined set): candidates repartition by
   shard and each task reads ITS shard's rows of ``docs_sharded`` straight
   through pyarrow with (shard, docno-range) row-group pruning — the docs
   table never enters the Spark plan at all, so nothing about it can
@@ -74,10 +73,10 @@ Exactness argument (property-tested against the exhaustive engine):
   boost chain tests per query token). For doc d with matched flagged terms:
 
   - token-level factors are bounded both ways: the title/desc match pcts lie
-    between (known-present flags)/n_orig and (known-present + unknown
+    between (flag-present tokens)/n_orig and (flag-present + unknown
     tokens)/n_orig, where *unknown* covers orig tokens with no posting in d
-    (they can still be field substrings) and flagless postings; same for
-    the all-tokens-in-snippet proximity test;
+    (they can still be field substrings); same for the all-tokens-in-snippet
+    proximity test;
   - the phrase chain compares the FULL query string, and a stemmed token
     need not be a substring of it ("happily" → "happili"), so token bits
     alone cannot rule a phrase out. A matched term t that IS a substring of
@@ -94,8 +93,8 @@ Exactness argument (property-tested against the exhaustive engine):
     < θ_k ≤ kth-largest boosted in the shard, so ≥ k shard-mates beat it.
     For the bulk of the corpus (matched tokens flagged 0, free tokens
     Bloom-absent) UBboost collapses to 1.0 and emission approaches the
-    exact per-shard top-k; an index without the flag/signature streams
-    falls back to the global MAX_BOOST margin, which is still exact.
+    exact per-shard top-k; a doc whose tokens stay unresolved keeps the
+    looser margin up to MAX_BOOST, which is still exact.
 
 Everything inside the kernel is numpy/pandas over Arrow batches
 (``applyInPandas`` by shard); decode is the vectorized varint codec. The
@@ -202,7 +201,6 @@ def _phase1_kernel(
         return pd.DataFrame(columns=["query_id", "shard", "docno", "raw", "lb", "ub"])
     blocks_pdf = blocks_pdf.reset_index(drop=True)
     shard = int(blocks_pdf["shard"].iloc[0])
-    has_flags = "fls" in blocks_pdf.columns
     decode_cache: dict[int, tuple] = {}
     # slice the global kill set to this task's docno range once
     kill_sh = None
@@ -219,19 +217,14 @@ def _phase1_kernel(
         if i not in decode_cache:
             r = blocks_pdf.iloc[i]
             d, t, dl = codec.decode_postings(r["gaps"], r["tfs"], r["dls"])
-            fl = None
-            if has_flags and len(r["fls"]) > 0:
-                f = codec.varint_decode(r["fls"]).astype(np.int64)
-                if f.size == d.size:
-                    fl = f
+            fl = codec.varint_decode(r["fls"]).astype(np.int64)
             d = d.astype(np.int64)
             if sub_range is not None:
                 # mask to the cell: docnos ascend within a block, so the
                 # window is one contiguous slice
                 a = int(np.searchsorted(d, sub_range[0]))
                 z = int(np.searchsorted(d, sub_range[1], side="right"))
-                d, t, dl = d[a:z], t[a:z], dl[a:z]
-                fl = fl[a:z] if fl is not None else None
+                d, t, dl, fl = d[a:z], t[a:z], dl[a:z], fl[a:z]
             decode_cache[i] = (d, t, dl, fl)
         return decode_cache[i]
 
@@ -352,22 +345,20 @@ def _phase1_kernel(
                 parts_s.append(w * partial)
                 if with_bounds:
                     ext = np.zeros((d.size, 7))
-                    if fl is not None:
-                        known = (fl & 8) == 0  # FLAG_UNKNOWN sentinel
-                        b_t = ((fl & 1) > 0) & known
-                        b_d = ((fl & 2) > 0) & known
-                        b_s = ((fl & 4) > 0) & known
-                        m_o = orig_mult.get(t, 0)
-                        if m_o:
-                            ext[:, 0] = m_o * known
-                            ext[:, 1] = m_o * b_t
-                            ext[:, 2] = m_o * b_d
-                            ext[:, 3] = m_o * b_s
-                        if t in in_q:
-                            # term ⊆ query ∧ field ⊉ term ⇒ field ⊉ query
-                            ext[:, 4] = known & ~b_t
-                            ext[:, 5] = known & ~b_d
-                            ext[:, 6] = known & ~b_s
+                    b_t = (fl & 1) > 0
+                    b_d = (fl & 2) > 0
+                    b_s = (fl & 4) > 0
+                    m_o = orig_mult.get(t, 0)
+                    if m_o:
+                        ext[:, 0] = m_o
+                        ext[:, 1] = m_o * b_t
+                        ext[:, 2] = m_o * b_d
+                        ext[:, 3] = m_o * b_s
+                    if t in in_q:
+                        # term ⊆ query ∧ field ⊉ term ⇒ field ⊉ query
+                        ext[:, 4] = ~b_t
+                        ext[:, 5] = ~b_d
+                        ext[:, 6] = ~b_s
                     parts_e.append(ext)
             if not parts_d:
                 e = np.empty(0, np.int64), np.empty(0)
@@ -432,8 +423,7 @@ def _phase1_kernel(
         # not only when shard-local emission gates (su.size > k): the bounds
         # also feed the cross-shard θ-refinement in search_batch, where a
         # tight lb from any shard raises θ_global and a tight ub lets a
-        # candidate be dropped before the phase-2 metadata probe. UB/LB
-        # collapse to MAX_BOOST/1 when the index carries no flag stream.
+        # candidate be dropped before the phase-2 metadata probe.
         # bounds-only aux terms: the query's idf<=0 terms were dropped
         # from scoring (their contribution is 0), but their posting
         # FLAGS still resolve those orig tokens' field presence exactly
@@ -451,8 +441,6 @@ def _phase1_kernel(
                 continue
             for ri in by_term[t].index:
                 d, _tf, _dl, fl = decoded(int(ri))
-                if fl is None:
-                    continue
                 pos = np.searchsorted(du, d)
                 ok = pos < du.size
                 pos_ok = pos[ok]
@@ -461,19 +449,18 @@ def _phase1_kernel(
                 if idx.size == 0:
                     continue
                 flh = fl[ok][hit]
-                known = (flh & 8) == 0
-                b_t = ((flh & 1) > 0) & known
-                b_d = ((flh & 2) > 0) & known
-                b_s = ((flh & 4) > 0) & known
+                b_t = (flh & 1) > 0
+                b_d = (flh & 2) > 0
+                b_s = (flh & 4) > 0
                 if m_o:
-                    eu[idx, 0] += m_o * known
+                    eu[idx, 0] += m_o
                     eu[idx, 1] += m_o * b_t
                     eu[idx, 2] += m_o * b_d
                     eu[idx, 3] += m_o * b_s
                 if t_in_q:
-                    eu[idx, 4] += known & ~b_t
-                    eu[idx, 5] += known & ~b_d
-                    eu[idx, 6] += known & ~b_s
+                    eu[idx, 4] += ~b_t
+                    eu[idx, 5] += ~b_d
+                    eu[idx, 6] += ~b_s
         # field-signature Bloom pass for FREE orig tokens — those with
         # no posting rows in this shard (stopwords and OOV words have
         # none anywhere; a scored/aux term can be absent shard-locally).
@@ -601,12 +588,6 @@ class WandSearchEngine:
         # cells, one kernel task each. None = auto policy (_sub_split).
         self.sub_split = sub_split
         if mask is not None:
-            if not getattr(index, "has_block_bounds", False):
-                raise ValueError(
-                    "tombstone-masked queries need the avgdl-free "
-                    "(max_tf, min_dl) block bounds; this index predates "
-                    "them — compact (apply_tombstones) or rebuild instead"
-                )
             self.avgdl = float(mask.avgdl)
             # mask and index are immutable on an engine instance, so a
             # term's killed-count never changes — memoize across batches
@@ -973,8 +954,7 @@ class WandSearchEngine:
         refined candidates), ``"direct"`` (per-shard pyarrow probe — needs a
         written index, i.e. ``index.path``), or ``"auto"`` (direct when the
         pre-refinement candidate ceiling k·n_shards·|batch| exceeds
-        BROADCAST_CAND_CEILING or the index lacks the flag stream whose
-        bounds keep emission tight; broadcast otherwise).
+        BROADCAST_CAND_CEILING; broadcast otherwise).
 
         NOTE: with ``with_metadata=True`` this method is EAGER — the ranked
         winners (≤ k·|batch| rows) are collected here, their metadata is
@@ -1035,12 +1015,10 @@ class WandSearchEngine:
 
         # ---- phase 2: metadata for REFINED survivors only ----------------
         # join-mode gate (module doc): broadcast is only safe while the
-        # worst-case candidate ceiling stays small AND the index carries the
-        # flag stream (without it the per-shard emission bounds fall back to
-        # the loose MAX_BOOST margin and candidates can approach the match
-        # set); past either limit, the direct per-shard probe reads only the
-        # row groups the candidates touch — exchange-free on docs in both
-        # modes (asserted in tests/test_explain_plans).
+        # worst-case candidate ceiling stays small; past it, the direct
+        # per-shard probe reads only the row groups the candidates touch —
+        # exchange-free on docs in both modes (asserted in
+        # tests/test_explain_plans).
         if docs_join == "auto":
             # emission floor is per phase-1 GROUP (n_shards × sub-split
             # cells), so the ceiling estimate scales with both
@@ -1050,10 +1028,7 @@ class WandSearchEngine:
             docs_join = (
                 "direct"
                 if self.index.path is not None
-                and (
-                    ceiling > self.BROADCAST_CAND_CEILING
-                    or not self.index.has_flag_stream
-                )
+                and ceiling > self.BROADCAST_CAND_CEILING
                 else "broadcast"
             )
             # NOTE (measured, 1M-doc bench corpus, BASELINE.md §query-side

@@ -1,11 +1,10 @@
-"""Kill/resume checkpointing and multi-pass segment merge properties
-(SURVEY.md §5.4-5.5, north-rule resumability + merge clauses)."""
+"""Kill/resume checkpointing (SURVEY.md §5.5, north-rule resumability)
+and the input checks of the segment merge."""
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
-from searchengine_spark.operators import checkpoint, index_build, merge, shards
+from searchengine_spark.operators import checkpoint, index_build, merge
 from searchengine_spark.operators.checkpoint import SimulatedFailure
 from searchengine_spark.sources import webgen
 
@@ -69,17 +68,6 @@ def test_resume_is_noop_when_complete(spark, pages, tmp_path_factory):
 
 
 # ------------------------------------------------------------ segment merge
-def _seg_col():
-    return F.pmod(
-        F.conv(F.substring(F.col("doc_id"), 1, 15), 16, 10).cast("long"), F.lit(3)
-    ).cast("int")
-
-
-@pytest.fixture(scope="module")
-def tokenized(pages):
-    return index_build.tokenize_documents(pages).cache()
-
-
 def test_merge_segments_rejects_mixed_layouts(spark, pages, tmp_path_factory):
     """A positional and a plain segment have no common block layout."""
     root = str(tmp_path_factory.mktemp("mixed"))
@@ -91,41 +79,19 @@ def test_merge_segments_rejects_mixed_layouts(spark, pages, tmp_path_factory):
         merge.merge_segments(spark, [f"{root}/plain", f"{root}/pos"], f"{root}/out")
 
 
-def _decoded(blocks_df) -> pd.DataFrame:
-    out = shards.decode_blocks_to_postings(blocks_df.toPandas())
-    return out.sort_values(["term", "docno"]).reset_index(drop=True)
-
-
-@pytest.fixture(scope="module")
-def block_segments(spark, tokenized, tmp_path_factory):
-    """Doc-disjoint block segments cut from ONE production build: segment i
-    is the full index with every other segment's docs tombstoned, so all
-    segments share the global docno space by construction."""
-    path = str(tmp_path_factory.mktemp("full_blocks"))
-    global_idx = shards.shard_and_write_from_tokenized(
-        spark, tokenized, path, n_shards=8, block_size=16
-    )
-    seg_of = global_idx.docs.select("doc_id", _seg_col().alias("_s"))
-    seg_blocks = [
-        merge.apply_tombstones(
-            spark, global_idx, seg_of.filter(F.col("_s") != i)
-        ).blocks.cache()
-        for i in range(3)
-    ]
-    return global_idx, seg_blocks, global_idx.avgdl
-
-
-def test_block_merge_equals_direct_build(spark, block_segments):
-    global_idx, seg_blocks, avgdl = block_segments
-    merged = merge.merge_block_segments(seg_blocks, avgdl, block_size=16)
-    pd.testing.assert_frame_equal(_decoded(merged), _decoded(global_idx.blocks))
-
-
-def test_multi_pass_merge_associative(spark, block_segments):
-    """1-pass (3-way) ≡ 2-pass (fan_in=2) ≡ direct build."""
-    global_idx, seg_blocks, avgdl = block_segments
-    one_pass = merge.merge_block_segments(seg_blocks, avgdl, block_size=16)
-    two_pass = merge.multi_pass_merge(seg_blocks, avgdl, block_size=16, fan_in=2)
-    ref = _decoded(global_idx.blocks)
-    pd.testing.assert_frame_equal(_decoded(one_pass), ref)
-    pd.testing.assert_frame_equal(_decoded(two_pass), ref)
+def test_merge_segments_rejects_shared_docs(spark, pages_pdf, tmp_path_factory):
+    """Two segments of 12 docs that share 4 would merge into 24 docs with
+    16 distinct doc_ids: the merge refuses and names a shared doc_id."""
+    root = str(tmp_path_factory.mktemp("overlap"))
+    doc_ids = []
+    for name, rows in (("a", slice(0, 12)), ("b", slice(8, 20))):
+        tk = index_build.tokenize_documents(
+            spark.createDataFrame(pages_pdf.iloc[rows])
+        )
+        tk.write.parquet(f"{root}/{name}/tokenized")
+        doc_ids.append({r["doc_id"] for r in tk.select("doc_id").collect()})
+    shared = doc_ids[0] & doc_ids[1]
+    assert len(shared) == 4
+    with pytest.raises(ValueError, match="not doc-disjoint") as err:
+        merge.merge_segments(spark, [f"{root}/a", f"{root}/b"], f"{root}/out")
+    assert any(d in str(err.value) for d in shared), err.value

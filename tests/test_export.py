@@ -6,8 +6,9 @@ postings multiset, doc_stats, term_stats, stats and doc metadata as the
 in-memory logical spec (``index_build.build_index``) built directly from
 the corpus — and the exhaustive BM25 engine over the exported tables is
 rank-identical to WAND over the blocks they came from. The same 400-doc,
-4-shard build also pins co-sharded docs, kill/resume identity and
-head-term skew; tiny-corpus and fractional-boost edges follow, and the
+4-shard build also pins co-sharded docs, kill/resume identity,
+head-term skew and the reader's refusal of a copy with one part of the
+block layout dropped; tiny-corpus and fractional-boost edges follow, and the
 CLI test closes the file: build → verify → merge of two half builds →
 query, rank-identical to the whole-corpus build.
 """
@@ -96,25 +97,48 @@ def test_exhaustive_over_export_rank_identical_to_wand(spark, sharded, exported)
     assert a == b
 
 
-def test_export_fallback_without_doc_len_column(spark, sharded):
-    """Pre-doc_len docs_sharded layouts: doc_stats recovered from postings."""
-    legacy = shards.ShardedIndex(
-        blocks=sharded.blocks,
-        docs=sharded.docs.drop("doc_len"),
-        term_stats=sharded.term_stats,
-        n_docs=sharded.n_docs,
-        avgdl=sharded.avgdl,
-        n_shards=sharded.n_shards,
-        shard_size=sharded.shard_size,
-        block_size=sharded.block_size,
-        with_positions=sharded.with_positions,
-    )
-    tables = shards.export_index(spark, legacy)
-    from_docs = shards.export_index(spark, sharded)
-    a = {r["doc_id"]: r["doc_len"] for r in tables.doc_stats.collect()}
-    b = {r["doc_id"]: r["doc_len"] for r in from_docs.doc_stats.collect()}
-    # fallback misses only zero-posting docs (none in this corpus)
-    assert a == b
+@pytest.mark.parametrize(
+    "dropped, named",
+    [
+        ("blocks:fls", "blocks.fls"),
+        ("blocks:max_tf,min_dl", "blocks.max_tf, blocks.min_dl"),
+        ("docs_sharded:doc_len", "docs_sharded.doc_len"),
+        ("meta:sum_doc_len", "meta.json sum_doc_len"),
+    ],
+)
+def test_reader_rejects_legacy_layouts(spark, sharded, tmp_path, dropped, named):
+    """A copy of a written index with one part of the block layout dropped
+    is refused by the reader, naming the part, and `cli verify` exits 1."""
+    import json
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from searchengine_spark import cli
+
+    path = str(tmp_path / "legacy")
+    shutil.copytree(sharded.path, path)
+    table, cols = dropped.split(":")
+    if table == "meta":
+        with open(f"{path}/meta.json") as f:
+            meta = json.load(f)
+        del meta[cols]
+        with open(f"{path}/meta.json", "w") as f:
+            json.dump(meta, f)
+    else:
+        # without the footer's Spark schema, which still lists the columns
+        data = (
+            pq.read_table(f"{path}/{table}")
+            .drop(cols.split(","))
+            .replace_schema_metadata(None)
+        )
+        shutil.rmtree(f"{path}/{table}")
+        os.mkdir(f"{path}/{table}")
+        pq.write_table(data, f"{path}/{table}/part-0.parquet")
+    with pytest.raises(ValueError, match=f"missing {named}"):
+        shards.read_sharded_index(spark, path)
+    assert cli.main(["verify", "--index", path]) == 1
 
 
 def _decoded(index) -> pd.DataFrame:

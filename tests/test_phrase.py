@@ -340,30 +340,6 @@ def test_cooccur_col_vs_bruteforce(spark, streams):
     assert got == want
 
 
-# ---------------------------------------------------------------- merge
-def test_positional_block_merge_roundtrip(spark, pos_index):
-    """Splitting positional block rows into segments and merging them back
-    reproduces the exact postings INCLUDING positions (merge re-blocks,
-    so block boundaries may differ — compare decoded postings)."""
-    from pyspark.sql import functions as F
-
-    from searchengine_spark.operators import merge
-
-    blocks = pos_index.blocks.cache()
-    seg_a = blocks.filter(F.pmod(F.xxhash64("term", "block_no"), F.lit(2)) == 0)
-    seg_b = blocks.filter(F.pmod(F.xxhash64("term", "block_no"), F.lit(2)) == 1)
-    merged = merge.merge_block_segments(
-        [seg_a, seg_b], avgdl=pos_index.avgdl, block_size=pos_index.block_size
-    )
-    assert "pcounts" in merged.columns
-
-    def _decoded(df):
-        out = shards.decode_blocks_to_positional_postings(df.toPandas())
-        return out.sort_values(["term", "docno"]).reset_index(drop=True)
-
-    pd.testing.assert_frame_equal(_decoded(merged), _decoded(blocks))
-
-
 # ---------------------------------------------------------------- native column
 def test_phrase_tf_col_vs_bruteforce(spark, streams):
     from pyspark.sql import functions as F

@@ -109,6 +109,28 @@ def test_positional_tombstones_preserve_phrases(spark, tmp_path_factory):
     }
     assert want == got
 
+    # the rewritten blocks keep every surviving posting's own positions
+    def positions(index):
+        pdf = shards.decode_blocks_to_positional_postings(index.blocks.toPandas())
+        doc_ids = dict(index.docs.select("docno", "doc_id").collect())
+        return {
+            (r.term, doc_ids[r.docno]): tuple(r.positions) for r in pdf.itertuples()
+        }
+
+    assert positions(compacted) == positions(fresh)
+    # and a phrase the corpus holds (the one above matches no doc here)
+    vocab = webgen.vocabulary()
+    q = f"{vocab[0]} {vocab[1]}"
+    want = {
+        (r["doc_id"], r["phrase_tf"])
+        for r in phrase.phrase_match_sharded(spark, fresh, q, top_k=None).collect()
+    }
+    got = {
+        (r["doc_id"], r["phrase_tf"])
+        for r in phrase.phrase_match_sharded(spark, compacted, q, top_k=None).collect()
+    }
+    assert want and want == got
+
 
 def test_mask_stats_exact(spark, corpora):
     """build_mask derives the surviving N/avgdl arithmetically — they must
@@ -140,20 +162,6 @@ def test_masked_query_identical_to_fresh_build(spark, corpora):
     assert [x[:3] for x in w] == [x[:3] for x in g]
     for (_, _, _, s1), (_, _, _, s2) in zip(w, g):
         assert abs(s1 - s2) <= 1e-9 * max(abs(s1), abs(s2), 1.0)
-
-
-def test_mask_requires_block_bounds(spark, corpora):
-    import dataclasses
-
-    from searchengine_spark.operators import tombstones
-
-    full, _fresh, _compacted, tomb_ids = corpora
-    legacy = dataclasses.replace(full, has_block_bounds=False)
-    with pytest.raises(ValueError, match="block "):
-        tombstones.build_mask(spark, legacy, tomb_ids)
-    mask = tombstones.build_mask(spark, full, tomb_ids)
-    with pytest.raises(ValueError, match="block "):
-        WandSearchEngine(spark, legacy, mask=mask)
 
 
 def test_mask_cap_enforced(spark, corpora):

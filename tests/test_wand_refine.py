@@ -174,23 +174,13 @@ def test_direct_probe_plan_never_scans_docs(spark, engine):
 
 def test_auto_gate_picks_direct_past_ceiling(spark, many_shard_index):
     """auto mode must switch to the direct probe when the pre-refinement
-    candidate ceiling (k·n_shards·|batch|) exceeds the broadcast cap, and
-    when the index lacks the flag stream (loose emission bounds)."""
+    candidate ceiling (k·n_shards·|batch|) exceeds the broadcast cap."""
     eng = WandSearchEngine(spark, many_shard_index)
     eng.BROADCAST_CAND_CEILING = 10  # force the ceiling branch
     queries = webgen.reference_queries()[:2]
     out = eng.search_batch(queries, top_k=TOP_K, with_metadata=False)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "docs_sharded" not in plan, plan
-    # flagless index (legacy layout) also routes to direct, whatever the size
-    import dataclasses
-
-    legacy = dataclasses.replace(many_shard_index, has_flag_stream=False)
-    out2 = WandSearchEngine(spark, legacy).search_batch(
-        queries, top_k=TOP_K, with_metadata=False
-    )
-    plan2 = out2._jdf.queryExecution().executedPlan().toString()
-    assert "docs_sharded" not in plan2, plan2
 
 
 def test_direct_probe_empty_and_sparse_results(spark, engine):
