@@ -40,7 +40,8 @@ from __future__ import annotations
 
 import json
 import math
-from dataclasses import dataclass
+import threading
+from dataclasses import dataclass, field
 from typing import Iterator
 
 import numpy as np
@@ -368,6 +369,42 @@ class ShardedIndex:
     # query engines probe docs_sharded/blocks directly with row-group
     # pruning instead of joining the whole table into the plan
     path: str | None = None
+    # term → (df, idf), or None for a term outside the vocabulary: the
+    # memo behind term_stats_for. Not an init field, so a
+    # dataclasses.replace copy (which may swap term_stats) starts empty.
+    _stats_memo: dict = field(default_factory=dict, init=False, repr=False, compare=False)
+    _stats_lock: threading.Lock = field(
+        default_factory=threading.Lock, init=False, repr=False, compare=False
+    )
+
+    # bound on memoized terms; past it the oldest entries are evicted
+    TERM_STATS_MEMO_MAX = 65_536
+
+    def term_stats_for(self, terms) -> dict[str, tuple[int, float]]:
+        """(df, idf) of each given term that is in the vocabulary.
+
+        ``term_stats`` never changes for an index, so looked-up terms are
+        memoized on the index itself: every engine over this object (a
+        serving tier builds a fresh masked engine per takedown) shares the
+        memo, and a batch whose terms were all seen before starts no job.
+        Unseen terms cost one pruned ``term_stats`` collect."""
+        with self._stats_lock:
+            stats = {t: self._stats_memo[t] for t in terms if t in self._stats_memo}
+        missing = [t for t in terms if t not in stats]
+        if missing:
+            got = {
+                r["term"]: (int(r["df"]), float(r["idf"]))
+                for r in self.term_stats.filter(F.col("term").isin(missing))
+                .select("term", "df", "idf")
+                .collect()
+            }
+            stats.update((t, got.get(t)) for t in missing)
+            with self._stats_lock:
+                self._stats_memo.update((t, stats[t]) for t in missing)
+                over = len(self._stats_memo) - self.TERM_STATS_MEMO_MAX
+                for t in list(self._stats_memo)[: max(over, 0)]:
+                    del self._stats_memo[t]
+        return {t: st for t, st in stats.items() if st is not None}
 
 
 def fieldsig_block_rows(sig_src: DataFrame, with_positions: bool = False) -> DataFrame:

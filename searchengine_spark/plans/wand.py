@@ -49,9 +49,30 @@ the driver by the tail every ranked engine shares
 (plans/bm25.finish_with_metadata): one pruned, JVM-only probe of the docs
 store for the winners' url/title/description/snippet, the query-relevant
 snippet windowed in Python on the driver, and the rows returned sorted by
-(query_id, rank) as an Arrow-built local frame. Once the winners are
-known, no job starts a Python worker or runs a global sort — at one query
-per batch those fixed per-job costs, not the data, are the batch.
+(query_id, rank) as an Arrow-built local frame.
+
+**Two arms for a ``with_metadata=True`` batch.** Everything above between
+the phases (θ tree aggregation, θ/candidate/query broadcasts, the window
+exchange, the winners' second probe) is there for scale, and at one query
+per batch those fixed per-job costs, not the data, are the batch. So when
+the phase-1 emission is small, ``search_batch`` finishes it in the driver:
+
+* **driver arm** — the phase-1 frame is collected (G =
+  ``DRIVER_CAND_CEILING``; skipped when the k·groups·|batch| emission floor
+  alone exceeds G). When the batch's Σ df over its scored terms is ≤ G the
+  emission provably fits and a plain collect of the unpersisted frame runs
+  (2 jobs); otherwise a bounded ``limit(G + 1).collect()`` of the persisted
+  frame, so that an overflow hands phase 1's output to the tree arm instead
+  of re-running it. With ≤ G rows in hand: θ-refinement in numpy by the
+  same rule (:func:`theta_keep`), one docs probe for the survivors, the
+  shared boost chain over a local frame (Spark folds that projection at
+  planning time — no job), then the normalize / rank / top-k / threshold of
+  the tree arm's window on those rows in the driver. A warm one-query
+  batch runs 3 jobs instead of 12.
+* **tree arm** — the plan described above, unchanged. It serves batches
+  whose emission exceeds G, explicit ``docs_join="broadcast"|"direct"``,
+  and ``with_metadata=False``, whose contract is a lazy plan the caller
+  executes: the driver arm would have to run phase 1 at call time.
 
 Exactness argument (property-tested against the exhaustive engine):
 
@@ -98,7 +119,9 @@ Exactness argument (property-tested against the exhaustive engine):
 
 Everything inside the kernel is numpy/pandas over Arrow batches
 (``applyInPandas`` by shard); decode is the vectorized varint codec. The
-driver-side work is only query analysis + the tiny per-term idf collect.
+driver-side work is query analysis, the per-term df/idf lookup (memoized on
+the index: ``ShardedIndex.term_stats_for``) and, on the driver arm, the
+finish of ≤ G candidate rows.
 """
 
 from __future__ import annotations
@@ -161,6 +184,21 @@ _assert_phrase_chain_monotonic()
 # plus the per-doc boosted-score bounds (raw·LBboost ≤ boosted ≤ raw·UBboost)
 # that feed the cross-shard θ-refinement
 _CAND_SCHEMA = "query_id int, shard int, docno long, raw double, lb double, ub double"
+
+
+def theta_keep(query_id: np.ndarray, lb: np.ndarray, ub: np.ndarray, k: int) -> np.ndarray:
+    """The cross-shard θ-refinement rule (module doc) over candidate arrays:
+    per query, θ = the kth-largest ``lb``, none when the query has fewer
+    than k candidates; keep a candidate iff there is no θ or ``ub ≥ θ``.
+    Returns the keep mask. The driver arm applies it to the collected
+    candidates; ``WandSearchEngine._refine`` computes the same θ with a
+    tree aggregation (tests/test_wand_refine checks the two agree)."""
+    keep = np.ones(query_id.size, dtype=bool)
+    for q in np.unique(query_id):
+        m = query_id == q
+        if k > 0 and int(m.sum()) >= k:
+            keep[m] = ub[m] >= np.partition(lb[m], -k)[-k]
+    return keep
 
 
 def _phase1_kernel(
@@ -624,7 +662,7 @@ class WandSearchEngine:
 
             def count_killed(batches):
                 for pdf in batches:
-                    terms_out, counts = [], []
+                    counts: dict[str, int] = {}
                     for r in pdf.itertuples(index=False):
                         # per-block precheck: any kill docno in range?
                         i = int(np.searchsorted(kill, r.min_docno))
@@ -635,12 +673,16 @@ class WandSearchEngine:
                         ).astype(np.int64)
                         c = int(np.isin(d, kill).sum())
                         if c:
-                            terms_out.append(r.term)
-                            counts.append(c)
-                    if terms_out:
-                        yield pd.DataFrame({"term": terms_out, "killed": counts})
+                            counts[r.term] = counts.get(r.term, 0) + c
+                    if counts:
+                        yield pd.DataFrame(
+                            {"term": list(counts), "killed": list(counts.values())}
+                        )
 
-            rows = (
+            # the per-batch partial counts are summed here in the driver:
+            # a groupBy would add an exchange, and with it a job of its own
+            got: dict[str, int] = {}
+            for r in (
                 self.index.blocks.filter(F.col("term").isin(missing))
                 # coarse kill-range filter is Catalyst-side: row groups
                 # wholly outside [kill.min, kill.max] never reach Python
@@ -650,11 +692,9 @@ class WandSearchEngine:
                 )
                 .select("term", "min_docno", "max_docno", "gaps")
                 .mapInPandas(count_killed, "term string, killed long")
-                .groupBy("term")
-                .agg(F.sum("killed").alias("killed"))
                 .collect()
-            )
-            got = {r["term"]: int(r["killed"]) for r in rows}
+            ):
+                got[r["term"]] = got.get(r["term"], 0) + int(r["killed"])
             for t in missing:
                 self._killed_cache[t] = got.get(t, 0)
         return {
@@ -663,7 +703,9 @@ class WandSearchEngine:
 
     def _analyze(self, queries, stopwords):
         """Driver-side: per-query term weights w = idf·mult·importance plus
-        boost metadata. idf collect touches only the query terms (tiny)."""
+        boost metadata. df/idf come from the index's memo
+        (``ShardedIndex.term_stats_for``): a pruned collect of the unseen
+        query terms only, no job at all for terms seen before."""
         analyzed = {}
         all_terms: set[str] = set()
         for qid, text in queries:
@@ -674,34 +716,21 @@ class WandSearchEngine:
             all_terms.update(a[0].keys())
         if not analyzed:
             return None, []
-        term_list = sorted(all_terms)
+        stats = self.index.term_stats_for(sorted(all_terms))
         if self.mask is None:
-            idf = {
-                r["term"]: float(r["idf"])
-                for r in self.index.term_stats.filter(F.col("term").isin(term_list))
-                .select("term", "idf")
-                .collect()
-            }
+            idf = {t: st[1] for t, st in stats.items()}
         else:
             # masked idf: df' = df − killed postings, N' = surviving count —
             # the same formula a fresh build of the survivors would store.
             # A term whose every posting is masked vanishes from the
             # vocabulary (absent from idf), exactly as in a fresh build.
-            import math as _math
-
-            base_df = {
-                r["term"]: int(r["df"])
-                for r in self.index.term_stats.filter(F.col("term").isin(term_list))
-                .select("term", "df")
-                .collect()
-            }
-            killed_df = self._killed_df(term_list)
+            killed_df = self._killed_df(sorted(stats))
             n2 = float(self.mask.n_docs)
             idf = {}
-            for t, df0 in base_df.items():
+            for t, (df0, _) in stats.items():
                 dfp = df0 - killed_df.get(t, 0)
                 if dfp > 0:
-                    idf[t] = max(0.0, _math.log((n2 - dfp + 0.5) / (dfp + 0.5)))
+                    idf[t] = max(0.0, math.log((n2 - dfp + 0.5) / (dfp + 0.5)))
         qinfo = []
         for qid, (term_mult, orig_tokens, original_query) in analyzed.items():
             weights = {}
@@ -896,6 +925,20 @@ class WandSearchEngine:
     # emission floor for common terms) the refined set is no longer assumed
     # broadcast-safe and phase 2 switches to the direct per-shard probe
     BROADCAST_CAND_CEILING = 2_000_000
+    # G, the driver-arm gate of search_batch: a with_metadata batch whose
+    # phase-1 emission is at most this many candidate rows is finished in
+    # the driver (_finish_in_driver); past it the tree arm runs. Measured
+    # (BASELINE.md §driver arm, local[4]): the driver arm's cost grows
+    # ~40-60 µs per candidate (collect, survivors' probe and boost), and it
+    # stops beating the tree arm at ~19.5k candidates on a 2,000-doc
+    # 4-shard index and ~16k on a 20,000-doc 8-shard index.
+    DRIVER_CAND_CEILING = 16_000
+
+    def _emission_floor(self, top_k: int, n_queries: int) -> int:
+        """k·groups·|batch|: the phase-1 emission floor for common terms.
+        Emission floors at ~k rows per kernel group (n_shards × sub-split
+        cells) holding a query term; a tie-heavy corpus can emit far more."""
+        return self.index.n_shards * self._sub_split() * max(top_k, 1) * n_queries
 
     def _probe_docs_direct(self, candidates: DataFrame) -> DataFrame:
         """Phase-2 docs probe that never puts the docs table in the Spark
@@ -956,6 +999,17 @@ class WandSearchEngine:
         pre-refinement candidate ceiling k·n_shards·|batch| exceeds
         BROADCAST_CAND_CEILING; broadcast otherwise).
 
+        Two arms (module doc). With ``with_metadata=True`` and
+        ``docs_join="auto"``, a batch whose phase-1 emission is at most
+        ``DRIVER_CAND_CEILING`` = 16,000 candidate rows (measured: where the
+        driver arm stops beating the tree arm, BASELINE.md §driver arm) is
+        finished in the driver; the collect is skipped when the
+        k·groups·|batch| emission floor already exceeds it. Every other
+        batch takes the tree arm: θ tree aggregation and a Spark phase 2.
+        ``with_metadata=False`` always takes the tree arm, because its
+        result is a lazy plan and the driver arm has to run phase 1 to
+        finish. Both arms return the same rows.
+
         NOTE: with ``with_metadata=True`` this method is EAGER — the ranked
         winners (≤ k·|batch| rows) are collected here, their metadata is
         probed and their snippets windowed in the driver, so the full query
@@ -977,39 +1031,140 @@ class WandSearchEngine:
                 if with_metadata
                 else "query_id int, rank int, doc_id string, score double",
             )
-        # persist the narrow phase-1 candidate frame: the θ tree-agg and the
-        # ub-filter branch both consume it, and without the persist the
-        # (expensive) phase-1 kernel would execute twice. Storage level by
-        # lifecycle: the EAGER with_metadata path uses MEMORY_AND_DISK
-        # (spill, don't OOM — the frame is narrow ~50 B rows but
-        # O(k·n_shards·|batch|) worst case); the LAZY path returns a plan
-        # the caller executes later, so it uses MEMORY_ONLY, whose blocks
-        # are LRU-EVICTABLE (eviction just re-runs the kernel for the
-        # evicted partitions). The finally below drops the persist on every
-        # exit — eager success, ANY exception (including the docs_join
-        # ValueError, which used to leak the entry) — except the lazy
-        # return, which hands the entry to self._lazy_cands; the next call
-        # (or release()) drops that one, so an engine never accumulates
-        # cache entries however many batches it serves.
+        self.release()
+        cands = self._candidates(qinfo, term_list, top_k, prune)
+        G = self.DRIVER_CAND_CEILING
+        driver_arm = (
+            with_metadata
+            and docs_join == "auto"
+            and self._emission_floor(top_k, len(qinfo)) <= G
+        )
+        if driver_arm and self._match_bound(qinfo) <= G:
+            # the emission provably fits: a plain collect, no persist
+            return self._finish_in_driver(cands.collect(), qinfo, top_k)
+        # persist the narrow phase-1 candidate frame: the bounded collect
+        # below, the θ tree-agg and the ub-filter branch all consume it, and
+        # without the persist the (expensive) phase-1 kernel would execute
+        # again for each. Storage level by lifecycle: the EAGER
+        # with_metadata path uses MEMORY_AND_DISK (spill, don't OOM — the
+        # frame is narrow ~50 B rows but O(k·n_shards·|batch|) worst case);
+        # the LAZY path returns a plan the caller executes later, so it uses
+        # MEMORY_ONLY, whose blocks are LRU-EVICTABLE (eviction just re-runs
+        # the kernel for the evicted partitions). The finally below drops
+        # the persist on every exit — eager success, ANY exception
+        # (including the docs_join ValueError, which used to leak the
+        # entry) — except the lazy return, which hands the entry to
+        # self._lazy_cands; the next call (or release()) drops that one, so
+        # an engine never accumulates cache entries however many batches it
+        # serves.
         from pyspark import StorageLevel
 
-        self.release()
-        raw_cands = self._candidates(qinfo, term_list, top_k, prune).persist(
+        raw_cands = cands.persist(
             StorageLevel.MEMORY_AND_DISK if with_metadata
             else StorageLevel.MEMORY_ONLY
         )
         try:
+            if driver_arm:
+                # the emission may or may not fit: a bounded collect of the
+                # persisted frame, which the tree arm reuses on overflow
+                rows = raw_cands.limit(G + 1).collect()
+                if len(rows) <= G:
+                    return self._finish_in_driver(rows, qinfo, top_k)
             return self._finish_batch(
-                raw_cands, qinfo, term_list, top_k, with_metadata, docs_join
+                raw_cands, qinfo, top_k, with_metadata, docs_join
             )
         finally:
             if raw_cands is not self._lazy_cands:
                 raw_cands.unpersist(blocking=False)
 
+    def _match_bound(self, qinfo) -> int:
+        """Σ over the batch's queries of their scored terms' df (memoized on
+        the index). Every phase-1 candidate is a (query, doc matching one of
+        its scored terms) pair, so this bounds the emission from above."""
+        stats = self.index.term_stats_for({t for _, w, *_ in qinfo for t in w})
+        return sum(stats[t][0] for _, w, *_ in qinfo for t in w)
+
+    def _docs_meta(self, keys) -> dict:
+        """(shard, docno) → (doc_id, url, title, description,
+        content_snippet) for the given keys, in ONE pruned, JVM-only probe
+        of the docs store with DRIVER-KNOWN keys: the shard IN-list prunes
+        whole shard files, the docno range prunes row groups of the
+        docno-sorted layout at the parquet scan, and the docno IN-list keeps
+        the rows to the keys' docs — so the caller joins them in the driver;
+        a join in the plan would broadcast the keys in a job of its own.
+        The IN-lists are SQL text: ``Column.isin`` builds one JVM literal
+        per value through py4j, ~0.35 ms each (1.1 s for 3,000 docnos)."""
+        if not keys:
+            return {}
+        docnos = sorted({int(d) for _s, d in keys})
+        shard_ids = sorted({int(sh) for sh, _d in keys})
+        return {
+            (m["shard"], m["docno"]): tuple(m[2:])
+            for m in self.index.docs.select(
+                "shard", "docno", "doc_id", "url", "title", "description",
+                "content_snippet",
+            )
+            .filter(
+                F.expr(f"shard IN ({','.join(map(str, shard_ids))})")
+                & F.col("docno").between(docnos[0], docnos[-1])
+                & F.expr(f"docno IN ({','.join(map(str, docnos))})")
+            )
+            .collect()
+        }
+
+    def _finish_in_driver(self, cands: list, qinfo, top_k: int) -> DataFrame:
+        """Driver arm of search_batch, over the ≤ DRIVER_CAND_CEILING
+        collected phase-1 rows: the θ-refinement rule (:func:`theta_keep`),
+        one docs probe for the survivors (:meth:`_docs_meta`), the shared
+        boost chain over a :func:`local_frame` (Spark folds a projection of
+        a local relation at planning time, so scoring starts no job), then
+        the per-query normalize, (−score, doc_id) rank, top-k and threshold
+        of the tree arm's window, here on the survivors in the driver."""
+        if cands:
+            def col(i, dtype):
+                return np.fromiter((c[i] for c in cands), dtype, len(cands))
+
+            keep = theta_keep(
+                col(0, np.int64), col(4, np.float64), col(5, np.float64), top_k
+            )
+            cands = [c for c, kept in zip(cands, keep) if kept]
+        meta = self._docs_meta({(c[1], c[2]) for c in cands})
+        qmeta = {qid: (oq, toks) for qid, _, _, toks, oq in qinfo}
+        rows = [
+            (q, meta[(sh, d)][0], raw, *meta[(sh, d)][2:], *qmeta[q])
+            for q, sh, d, raw, _lb, _ub in cands
+            if (sh, d) in meta
+        ]
+        scored = local_frame(
+            self.spark,
+            rows,
+            "query_id int, doc_id string, score double, title string, "
+            "description string, content_snippet string, "
+            "original_query string, orig_tokens array<string>",
+        ).select("query_id", "doc_id", boost_chain_expr().alias("score"))
+        by_query: dict[int, list] = {}
+        for q, doc_id, score in scored.collect():
+            by_query.setdefault(q, []).append((doc_id, score))
+        fields = {m[0]: m[1:] for m in meta.values()}
+        winners = []
+        for q, hits in by_query.items():
+            top = max(score for _d, score in hits)
+            if top > 0:
+                hits = [(doc_id, score / top) for doc_id, score in hits]
+            hits.sort(key=lambda h: (-h[1], h[0]))
+            winners.extend(
+                (q, rank, doc_id, *fields[doc_id], score)
+                for rank, (doc_id, score) in enumerate(hits[:top_k], 1)
+                if score > MIN_SCORE_THRESHOLD
+            )
+        return finish_with_metadata(
+            self.spark, winners, {qid: toks for qid, _, _, toks, _ in qinfo}
+        )
+
     def _finish_batch(
-        self, raw_cands, qinfo, term_list, top_k, with_metadata, docs_join
+        self, raw_cands, qinfo, top_k, with_metadata, docs_join
     ) -> DataFrame:
-        """Phases 2+ of search_batch, split out so the caller's finally can
+        """Tree arm of search_batch, split out so the caller's finally can
         own the raw_cands persist lifecycle."""
         candidates = self._refine(raw_cands, top_k, self.index.n_shards)
 
@@ -1020,15 +1175,11 @@ class WandSearchEngine:
         # exchange-free on docs in both modes (asserted in
         # tests/test_explain_plans).
         if docs_join == "auto":
-            # emission floor is per phase-1 GROUP (n_shards × sub-split
-            # cells), so the ceiling estimate scales with both
-            ceiling = (
-                self.index.n_shards * self._sub_split() * max(top_k, 1) * len(qinfo)
-            )
             docs_join = (
                 "direct"
                 if self.index.path is not None
-                and ceiling > self.BROADCAST_CAND_CEILING
+                and self._emission_floor(top_k, len(qinfo))
+                > self.BROADCAST_CAND_CEILING
                 else "broadcast"
             )
             # NOTE (measured, 1M-doc bench corpus, BASELINE.md §query-side
@@ -1097,35 +1248,13 @@ class WandSearchEngine:
 
         # winners-only metadata fetch: the ranked set is ≤ top_k·|batch|
         # rows, so collect it (tiny — the same cardinality the caller will
-        # collect) and re-probe the docs store with DRIVER-KNOWN keys: the
-        # shard IN-list prunes whole shard files and the docno range prunes
-        # row groups of the docno-sorted layout at the parquet scan — the
-        # winner fetch touches a few row groups, not the corpus, and no doc
-        # metadata ever enters an exchange. The docno IN-list keeps the
-        # probe to the winners' docs (≤ top_k·|batch| rows), so the winners
-        # join them in the driver on (shard, docno) — a join in the plan
-        # would broadcast the winners in a job of its own.
-        # the collect is the last job that touches raw_cands: the final
-        # probe below is built from the collected winners + the docs store,
-        # so search_batch's finally can drop the persist as soon as this
-        # method returns (or raises).
+        # collect) and probe the docs store for the winners alone
+        # (_docs_meta: pruned, JVM-only, joined in the driver), so no doc
+        # metadata ever enters an exchange. The collect is the last job that
+        # touches raw_cands, so search_batch's finally can drop the persist
+        # as soon as this method returns (or raises).
         winners = out.select("query_id", "rank", "shard", "docno", "score").collect()
-        if not winners:
-            return local_frame(self.spark, [], RESULT_SCHEMA)
-        docnos = sorted({w["docno"] for w in winners})
-        meta = {
-            (m["shard"], m["docno"]): m[2:]
-            for m in self.index.docs.select(
-                "shard", "docno", "doc_id", "url", "title", "description",
-                "content_snippet",
-            )
-            .filter(
-                F.col("shard").isin(sorted({w["shard"] for w in winners}))
-                & F.col("docno").between(docnos[0], docnos[-1])
-                & F.col("docno").isin(docnos)
-            )
-            .collect()
-        }
+        meta = self._docs_meta({(w["shard"], w["docno"]) for w in winners})
         return finish_with_metadata(
             self.spark,
             [

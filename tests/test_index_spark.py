@@ -158,11 +158,12 @@ def sharded_index(spark, corpus, tmp_path_factory):
     )
 
 
-@pytest.mark.parametrize("docs_join", ["broadcast", "direct"])
+@pytest.mark.parametrize("docs_join", ["auto", "broadcast", "direct"])
 def test_wand_snippet_and_metadata_match_oracle(spark, sharded_index, oracle, docs_join):
-    """WAND twin of test_snippet_and_metadata_match_oracle, in both phase-2
-    docs-join modes: per rank, the same doc and the same url, title,
-    description and query-relevant snippet as the reference."""
+    """WAND twin of test_snippet_and_metadata_match_oracle, on the driver
+    arm (``auto`` at this size) and in both phase-2 docs-join modes of the
+    tree arm: per rank, the same doc and the same url, title, description
+    and query-relevant snippet as the reference."""
     from searchengine_spark.plans.wand import WandSearchEngine
 
     queries = webgen.reference_queries()[:4]

@@ -47,18 +47,12 @@ def test_health_reports_index_counts(server, service):
         assert body["term_count"] == service.term_count > 0
 
 
-def test_service_construction_starts_no_job(spark, service):
+def test_service_construction_starts_no_job(spark, service, count_jobs):
     """A service is built per engine (a takedown swaps in a fresh one), so
     construction must not pay for the health counts: they are computed on
     the first health() and cached."""
-    sc = spark.sparkContext
-    sc.setJobGroup("service-ctor", "SearchService construction")
-    try:
-        svc = serving.SearchService(spark, service.engine)
-        jobs = sc.statusTracker().getJobIdsForGroup("service-ctor")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert jobs == []
+    svc, jobs = count_jobs(lambda: serving.SearchService(spark, service.engine))
+    assert jobs == 0
     health = svc.health()
     assert health["document_count"] == N_DOCS
     assert health["term_count"] == svc.term_count == service.term_count > 0

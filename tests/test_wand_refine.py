@@ -19,12 +19,13 @@ score-identical to the exhaustive Catalyst engine.
 
 import math
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from searchengine_spark.operators import shards
 from searchengine_spark.plans.bm25 import BM25SearchEngine
-from searchengine_spark.plans.wand import WandSearchEngine
+from searchengine_spark.plans.wand import WandSearchEngine, theta_keep
 from searchengine_spark.sources import webgen
 
 N_DOCS = 400
@@ -115,7 +116,8 @@ def test_refine_has_no_per_query_sort_task(spark, engine, many_shard_index):
 def test_refine_theta_value_matches_full_sort(spark, engine):
     """The tree-agg θ must be bit-identical to a full-sort kth-largest —
     including duplicate lb values straddling the k boundary and queries
-    with fewer than k candidates (θ NULL ⇒ keep everything)."""
+    with fewer than k candidates (θ NULL ⇒ keep everything) — and keep the
+    same rows as the driver arm's ``theta_keep``."""
     rows = []
     # query 0: 7 candidates with duplicate lbs around k=5
     lbs = [9.0, 9.0, 7.0, 7.0, 7.0, 3.0, 1.0]
@@ -134,6 +136,10 @@ def test_refine_theta_value_matches_full_sort(spark, engine):
     assert q0 == [0, 1, 2, 3, 4], got
     q1 = sorted(r["docno"] for r in got if r["query_id"] == 1)
     assert q1 == [0, 1], got
+    # the driver arm's numpy rule keeps exactly the same rows
+    qid, lb, ub = (np.array([r[i] for r in rows]) for i in (0, 4, 5))
+    kept = [(r[0], r[2]) for r, k in zip(rows, theta_keep(qid, lb, ub, 5)) if k]
+    assert sorted(kept) == sorted((r["query_id"], r["docno"]) for r in got)
 
 
 def test_refinement_is_exact_vs_exhaustive(spark, engine, many_shard_index):
