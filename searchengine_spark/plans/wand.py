@@ -57,20 +57,20 @@ exchange, the winners' second probe) is there for scale, and at one query
 per batch those fixed per-job costs, not the data, are the batch. So when
 the phase-1 emission is small, ``search_batch`` finishes it in the driver:
 
-* **driver arm** — the phase-1 frame is collected (G =
-  ``DRIVER_CAND_CEILING``; skipped when the k·groups·|batch| emission floor
-  alone exceeds G). When the batch's Σ df over its scored terms is ≤ G the
-  emission provably fits and a plain collect of the unpersisted frame runs
-  (2 jobs); otherwise a bounded ``limit(G + 1).collect()`` of the persisted
-  frame, so that an overflow hands phase 1's output to the tree arm instead
-  of re-running it. With ≤ G rows in hand: θ-refinement in numpy by the
-  same rule (:func:`theta_keep`), one docs probe for the survivors, the
-  shared boost chain over a local frame (Spark folds that projection at
-  planning time — no job), then the normalize / rank / top-k / threshold of
-  the tree arm's window on those rows in the driver. A warm one-query
-  batch runs 3 jobs instead of 12.
+* **driver arm** — when the batch's Σ df over its scored terms (an upper
+  bound of the phase-1 emission, from the index's df memo) is at most G =
+  ``DRIVER_CAND_CEILING``, the phase-1 frame is collected (2 jobs). With
+  ≤ G rows in hand: θ-refinement in numpy by the same rule
+  (:func:`theta_keep`), one docs probe for the survivors, the shared boost
+  chain over a local frame (Spark folds that projection at planning time —
+  no job), then the normalize / rank / top-k / threshold of the tree arm's
+  window on those rows in the driver. A warm one-query batch runs 3 jobs
+  instead of 13. The θ rule and the normalize / rank / threshold step are
+  thus written twice, in numpy/Python here and as Spark aggregates and a
+  window in the tree arm; tests/test_wand_refine (θ) and
+  tests/test_wand_driver_arm (whole results, both arms) keep them in step.
 * **tree arm** — the plan described above, unchanged. It serves batches
-  whose emission exceeds G, explicit ``docs_join="broadcast"|"direct"``,
+  whose Σ df exceeds G, explicit ``docs_join="broadcast"|"direct"``,
   and ``with_metadata=False``, whose contract is a lazy plan the caller
   executes: the driver arm would have to run phase 1 at call time.
 
@@ -191,8 +191,9 @@ def theta_keep(query_id: np.ndarray, lb: np.ndarray, ub: np.ndarray, k: int) -> 
     per query, θ = the kth-largest ``lb``, none when the query has fewer
     than k candidates; keep a candidate iff there is no θ or ``ub ≥ θ``.
     Returns the keep mask. The driver arm applies it to the collected
-    candidates; ``WandSearchEngine._refine`` computes the same θ with a
-    tree aggregation (tests/test_wand_refine checks the two agree)."""
+    candidates; ``WandSearchEngine._refine`` implements the same rule a
+    second time, as a Spark tree aggregation, and
+    tests/test_wand_refine checks that the two keep the same rows."""
     keep = np.ones(query_id.size, dtype=bool)
     for q in np.unique(query_id):
         m = query_id == q
@@ -926,12 +927,13 @@ class WandSearchEngine:
     # broadcast-safe and phase 2 switches to the direct per-shard probe
     BROADCAST_CAND_CEILING = 2_000_000
     # G, the driver-arm gate of search_batch: a with_metadata batch whose
-    # phase-1 emission is at most this many candidate rows is finished in
-    # the driver (_finish_in_driver); past it the tree arm runs. Measured
-    # (BASELINE.md §driver arm, local[4]): the driver arm's cost grows
-    # ~40-60 µs per candidate (collect, survivors' probe and boost), and it
-    # stops beating the tree arm at ~19.5k candidates on a 2,000-doc
-    # 4-shard index and ~16k on a 20,000-doc 8-shard index.
+    # Σ df (an upper bound of its phase-1 emission) is at most this many
+    # candidate rows is finished in the driver (_finish_in_driver); past it
+    # the tree arm runs. Measured (BASELINE.md §driver arm, local[4]): the
+    # driver arm's cost grows ~40-60 µs per candidate (collect, survivors'
+    # probe and boost), and it stops beating the tree arm at ~19.5k
+    # candidates on a 2,000-doc 4-shard index and ~16k on a 20,000-doc
+    # 8-shard index.
     DRIVER_CAND_CEILING = 16_000
 
     def _emission_floor(self, top_k: int, n_queries: int) -> int:
@@ -1000,12 +1002,12 @@ class WandSearchEngine:
         BROADCAST_CAND_CEILING; broadcast otherwise).
 
         Two arms (module doc). With ``with_metadata=True`` and
-        ``docs_join="auto"``, a batch whose phase-1 emission is at most
+        ``docs_join="auto"``, a batch whose Σ df over its scored terms (an
+        upper bound of its phase-1 emission) is at most
         ``DRIVER_CAND_CEILING`` = 16,000 candidate rows (measured: where the
         driver arm stops beating the tree arm, BASELINE.md §driver arm) is
-        finished in the driver; the collect is skipped when the
-        k·groups·|batch| emission floor already exceeds it. Every other
-        batch takes the tree arm: θ tree aggregation and a Spark phase 2.
+        finished in the driver. Every other batch takes the tree arm: θ
+        tree aggregation and a Spark phase 2.
         ``with_metadata=False`` always takes the tree arm, because its
         result is a lazy plan and the driver arm has to run phase 1 to
         finish. Both arms return the same rows.
@@ -1033,30 +1035,27 @@ class WandSearchEngine:
             )
         self.release()
         cands = self._candidates(qinfo, term_list, top_k, prune)
-        G = self.DRIVER_CAND_CEILING
-        driver_arm = (
+        if (
             with_metadata
             and docs_join == "auto"
-            and self._emission_floor(top_k, len(qinfo)) <= G
-        )
-        if driver_arm and self._match_bound(qinfo) <= G:
-            # the emission provably fits: a plain collect, no persist
+            and self._match_bound(qinfo) <= self.DRIVER_CAND_CEILING
+        ):
+            # the emission provably fits under G: collect it and finish here
             return self._finish_in_driver(cands.collect(), qinfo, top_k)
-        # persist the narrow phase-1 candidate frame: the bounded collect
-        # below, the θ tree-agg and the ub-filter branch all consume it, and
-        # without the persist the (expensive) phase-1 kernel would execute
-        # again for each. Storage level by lifecycle: the EAGER
-        # with_metadata path uses MEMORY_AND_DISK (spill, don't OOM — the
-        # frame is narrow ~50 B rows but O(k·n_shards·|batch|) worst case);
-        # the LAZY path returns a plan the caller executes later, so it uses
-        # MEMORY_ONLY, whose blocks are LRU-EVICTABLE (eviction just re-runs
-        # the kernel for the evicted partitions). The finally below drops
-        # the persist on every exit — eager success, ANY exception
-        # (including the docs_join ValueError, which used to leak the
-        # entry) — except the lazy return, which hands the entry to
-        # self._lazy_cands; the next call (or release()) drops that one, so
-        # an engine never accumulates cache entries however many batches it
-        # serves.
+        # persist the narrow phase-1 candidate frame: the θ tree-agg and the
+        # ub-filter branch both consume it, and without the persist the
+        # (expensive) phase-1 kernel would execute twice. Storage level by
+        # lifecycle: the EAGER with_metadata path uses MEMORY_AND_DISK
+        # (spill, don't OOM — the frame is narrow ~50 B rows but
+        # O(k·n_shards·|batch|) worst case); the LAZY path returns a plan
+        # the caller executes later, so it uses MEMORY_ONLY, whose blocks
+        # are LRU-EVICTABLE (eviction just re-runs the kernel for the
+        # evicted partitions). The finally below drops the persist on every
+        # exit — eager success, ANY exception (including the docs_join
+        # ValueError, which used to leak the entry) — except the lazy
+        # return, which hands the entry to self._lazy_cands; the next call
+        # (or release()) drops that one, so an engine never accumulates
+        # cache entries however many batches it serves.
         from pyspark import StorageLevel
 
         raw_cands = cands.persist(
@@ -1064,12 +1063,6 @@ class WandSearchEngine:
             else StorageLevel.MEMORY_ONLY
         )
         try:
-            if driver_arm:
-                # the emission may or may not fit: a bounded collect of the
-                # persisted frame, which the tree arm reuses on overflow
-                rows = raw_cands.limit(G + 1).collect()
-                if len(rows) <= G:
-                    return self._finish_in_driver(rows, qinfo, top_k)
             return self._finish_batch(
                 raw_cands, qinfo, top_k, with_metadata, docs_join
             )
@@ -1119,7 +1112,9 @@ class WandSearchEngine:
         boost chain over a :func:`local_frame` (Spark folds a projection of
         a local relation at planning time, so scoring starts no job), then
         the per-query normalize, (−score, doc_id) rank, top-k and threshold
-        of the tree arm's window, here on the survivors in the driver."""
+        of the tree arm's window, written again here in Python for the
+        survivors (tests/test_wand_driver_arm requires both arms' rows to
+        be equal)."""
         if cands:
             def col(i, dtype):
                 return np.fromiter((c[i] for c in cands), dtype, len(cands))

@@ -3,6 +3,7 @@ import itertools
 import pytest
 
 from searchengine_spark.plans.session import get_spark
+from searchengine_spark.plans.wand import WandSearchEngine
 
 
 @pytest.fixture(scope="session")
@@ -31,3 +32,19 @@ def count_jobs(spark):
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+@pytest.fixture
+def arms(monkeypatch):
+    """The list of WAND arms that finished each ``search_batch`` call
+    (plans/wand.py): ``"_finish_in_driver"`` or ``"_finish_batch"``."""
+    calls = []
+    for name in ("_finish_in_driver", "_finish_batch"):
+        orig = getattr(WandSearchEngine, name)
+
+        def wrapped(self, *a, _orig=orig, _name=name, **k):
+            calls.append(_name)
+            return _orig(self, *a, **k)
+
+        monkeypatch.setattr(WandSearchEngine, name, wrapped)
+    return calls

@@ -159,7 +159,9 @@ def sharded_index(spark, corpus, tmp_path_factory):
 
 
 @pytest.mark.parametrize("docs_join", ["auto", "broadcast", "direct"])
-def test_wand_snippet_and_metadata_match_oracle(spark, sharded_index, oracle, docs_join):
+def test_wand_snippet_and_metadata_match_oracle(
+    spark, sharded_index, oracle, arms, docs_join
+):
     """WAND twin of test_snippet_and_metadata_match_oracle, on the driver
     arm (``auto`` at this size) and in both phase-2 docs-join modes of the
     tree arm: per rank, the same doc and the same url, title, description
@@ -169,6 +171,9 @@ def test_wand_snippet_and_metadata_match_oracle(spark, sharded_index, oracle, do
     queries = webgen.reference_queries()[:4]
     engine = WandSearchEngine(spark, sharded_index)
     res = engine.search_batch(queries, top_k=10, docs_join=docs_join)
+    assert arms == [
+        "_finish_in_driver" if docs_join == "auto" else "_finish_batch"
+    ]
     got: dict[int, list] = {}
     for r in res.collect():
         got.setdefault(r["query_id"], []).append(r)

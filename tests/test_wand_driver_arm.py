@@ -1,7 +1,7 @@
 """The two arms of ``WandSearchEngine.search_batch(with_metadata=True)``
-(plans/wand.py): a batch whose phase-1 emission fits under
-``DRIVER_CAND_CEILING`` is finished in the driver, any other batch by the
-tree arm (θ tree aggregation + Spark phase 2). Both must return the same
+(plans/wand.py): a batch whose Σ df, an upper bound of its phase-1
+emission, fits under ``DRIVER_CAND_CEILING`` is finished in the driver,
+any other batch by the tree arm (θ tree aggregation + Spark phase 2). Both must return the same
 rows — rank, doc_id and score — on every index layout, and a warm
 one-query batch must stay at its fixed-cost floor of Spark jobs."""
 
@@ -72,21 +72,6 @@ def batch(plain):
     return webgen.reference_queries()[:6] + [(100, rare), (101, zero)]
 
 
-@pytest.fixture
-def arms(monkeypatch):
-    """Records which arm finished each batch."""
-    calls = []
-    for name in ("_finish_in_driver", "_finish_batch"):
-        orig = getattr(WandSearchEngine, name)
-
-        def wrapped(self, *a, _orig=orig, _name=name, **k):
-            calls.append(_name)
-            return _orig(self, *a, **k)
-
-        monkeypatch.setattr(WandSearchEngine, name, wrapped)
-    return calls
-
-
 def _rows(df):
     return [(r["query_id"], r["rank"], r["doc_id"], r["score"]) for r in df.collect()]
 
@@ -113,19 +98,20 @@ def test_driver_arm_equals_tree_arm(engines, batch, arms, monkeypatch, name):
 
 
 @pytest.mark.parametrize("fits", [False, True])
-def test_bounded_collect(engines, batch, arms, monkeypatch, fits):
-    """G below the batch's Σ df, so the emission may not fit and the
-    persisted frame is collected with a bound. G below the emission (but
-    at its floor, so the collect runs): the collect overflows and the tree
-    arm answers. G at the emission: the bounded collect fits."""
+def test_driver_gate_is_sum_df(engines, batch, arms, monkeypatch, fits):
+    """The driver arm runs iff the batch's Σ df is at most G: G at Σ df
+    finishes in the driver, G one below it in the tree arm, with the same
+    rows either way. Σ df bounds the emission from above, so the driver
+    arm always holds every candidate."""
     eng = engines["plain"]
-    want = _rows(eng.search_batch(batch, top_k=TOP_K))
     qinfo, terms = eng._analyze(batch, DEFAULT_STOPWORDS)
     emitted = eng._candidates(qinfo, terms, TOP_K, True).count()
-    floor = eng._emission_floor(TOP_K, len(qinfo))
-    assert floor < emitted < eng._match_bound(qinfo), (floor, emitted)
+    bound = eng._match_bound(qinfo)
+    assert emitted <= bound, (emitted, bound)
+    monkeypatch.setattr(WandSearchEngine, "DRIVER_CAND_CEILING", bound)
+    want = _rows(eng.search_batch(batch, top_k=TOP_K))
     monkeypatch.setattr(
-        WandSearchEngine, "DRIVER_CAND_CEILING", emitted if fits else floor
+        WandSearchEngine, "DRIVER_CAND_CEILING", bound if fits else bound - 1
     )
     got = _rows(eng.search_batch(batch, top_k=TOP_K))
     last = "_finish_in_driver" if fits else "_finish_batch"
