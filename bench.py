@@ -13,8 +13,10 @@ measures, per round:
                      ($SPARK_GRAFT_BENCH_DOCS docs, default 30000); the
                      corpus parquet is generated once and cached, so the
                      measured time is pure indexing (not generation)
-  * query_batch    — the 21-query reference set against that index (one
-                     batched plan), results collected
+  * query_batch    — the 21-query reference set, one batched plan each:
+                     the exhaustive engine over the index's in-memory
+                     export (block decode included) and WAND over the
+                     blocks; the two must return the same rows
   * sf-dir queries — representative entry queries over $SPARK_GRAFT_SF_DIR
                      (bm25_topk, term_df_top100, minhash_signatures,
                      embedding_topk)
@@ -80,7 +82,6 @@ def run_bench(cpus: int = CPUS, n_docs: int = N_DOCS, sf_dir: str = SF_DIR) -> d
     queries: dict[str, float] = {}
 
     corpus_path = _ensure_corpus(spark, n_docs)
-    index_path = os.path.join(BENCH_DIR, f"index_{n_docs}_c{cpus}")
 
     # Headline indexing job: web_pages → compressed sharded index in one
     # pass (tokenize → docno join → single posting shuffle → Arrow encode
@@ -108,19 +109,11 @@ def run_bench(cpus: int = CPUS, n_docs: int = N_DOCS, sf_dir: str = SF_DIR) -> d
             "docs_per_sec": docs_per_sec,
         }
 
-    # Logical tables via layout EXPORT from the compressed index just built
-    # (shards.export_and_write_index): tokenize once, derive every other
-    # layout by vectorized block decode — never re-tokenize. Feeds the
-    # exhaustive BM25 engine (rank-identity asserted below vs WAND) and the
-    # DuckDB-checkable entry queries.
+    # The exhaustive BM25 engine over the in-memory logical export of the
+    # compressed index just built; its rows must equal WAND's below. The
+    # timing includes the export's block decode.
     t0 = time.time()
-    tables = shards_mod.export_and_write_index(
-        spark, sharded, index_path, postings_partitions=max(cpus, 8)
-    )
-    queries["logical_tables_export"] = round(time.time() - t0, 3)
-
-    t0 = time.time()
-    engine = BM25SearchEngine(spark, tables)
+    engine = BM25SearchEngine(spark, shards_mod.export_index(spark, sharded))
     res = engine.search_batch(webgen.reference_queries(), top_k=10)
     n_results = len(res.collect())
     queries["query_batch_21"] = round(time.time() - t0, 3)

@@ -15,10 +15,10 @@ Locally the same module runs as ``python -m searchengine_spark.cli ...``
 ``generate`` (test corpus), ``ingest-warc`` (Common-Crawl containers →
 pages table; also ``build --input-format warc`` to index straight from
 containers), ``build`` (= build_index.py + optimize_index.py: the one
-build, which writes the compressed sharded index), ``export`` (sharded →
-logical tables), ``query`` (= app.py search path; WAND over a sharded
-index), ``merge`` (doc-disjoint segments — ``build`` outputs or streamed
-segments — encoded into one sharded index), ``verify`` (= verify_index.py).
+build, which writes the compressed sharded index — the only on-disk index
+format), ``query`` (= app.py search path; WAND over a sharded index),
+``merge`` (doc-disjoint segments — ``build`` outputs or streamed segments
+— encoded into one sharded index), ``verify`` (= verify_index.py).
 """
 
 from __future__ import annotations
@@ -92,21 +92,6 @@ def cmd_build(args) -> int:
     print(json.dumps({"docs": ix.n_docs, "n_shards": ix.n_shards,
                       "wall_s": round(wall, 2),
                       "docs_per_sec": round(ix.n_docs / wall, 1)}))
-    return 0
-
-
-def cmd_export(args) -> int:
-    """Compressed sharded index → logical tables (vectorized block decode;
-    never re-tokenizes)."""
-    from searchengine_spark.operators import shards
-
-    spark = _spark(args)
-    index = shards.read_sharded_index(spark, args.index)
-    tables = shards.export_and_write_index(
-        spark, index, args.out, postings_partitions=args.partitions
-    )
-    n = tables.stats.collect()[0]["n_docs"]
-    print(json.dumps({"exported_docs": int(n), "path": args.out}))
     return 0
 
 
@@ -289,12 +274,6 @@ def main(argv: list[str] | None = None) -> int:
                    help="store token positions in posting blocks (phrase queries)")
     b.add_argument("--shards", type=int, default=None, help="explicit shard count (default: docs-per-shard policy)")
     b.set_defaults(fn=cmd_build)
-
-    e = sub.add_parser("export", help="sharded compressed index → logical tables")
-    e.add_argument("--index", required=True)
-    e.add_argument("--out", required=True)
-    e.add_argument("--partitions", type=int, default=32)
-    e.set_defaults(fn=cmd_export)
 
     q = sub.add_parser("query", help="BM25 top-k (WAND over a sharded index)")
     q.add_argument("--index", required=True)

@@ -65,8 +65,8 @@ DEFAULT_STOPWORDS: frozenset[str] = frozenset({
 # The compressed layout shards every term's postings by contiguous docno range
 # (operators/shards.py — the "salting" analog with ordered, block-codable
 # ranges); property-tested n_shards=1 ≡ n_shards=16 in tests/test_wand.py. The
-# logical postings layout stays a flat (term, doc_id, tf) table hash-bucketed
-# by term — no per-term collect_list exists anywhere in the build.
+# in-memory logical postings table is a flat (term, doc_id, tf) table — no
+# per-term collect_list exists anywhere in the build.
 # Posting block size for the delta-gap+varint codec (docs per block); each
 # block carries (max_tf, max_doc_id) metadata for block-max WAND.
 POSTING_BLOCK_SIZE: int = 128

@@ -20,29 +20,25 @@ weighted tf map (A1, indexer.py:92-107) aggregates only within one
 document, so stage 1 computes it map-side; stage 2 is a pure explode (no
 (doc,term) shuffle exists anywhere) plus the per-term df aggregation.
 
-There is one persisted build: ``shards.build_and_write_sharded`` runs
-stage 1 and then encodes the compressed sharded index straight from the
-tokenized frame — posting rows live only inside its single shuffle. The
-logical tables here are the in-memory spec the exhaustive
-``BM25SearchEngine`` scores over and the tests check that build against;
-``shards.export_index`` derives them from a written sharded index, and
-:func:`write_index` persists them — only for ``cli export``
-(``shards.export_and_write_index``) — in ``POSTING_BUCKETS`` hash
-directories so query-time term lookups prune whole directories — the
-distributed analog of the reference's dict lookup (indexer.py:384-394).
-Segment merges and streamed segments never persist logical tables: they
-go through the sharded encoder (operators/merge.py).
+There is one persisted build and one on-disk index format:
+``shards.build_and_write_sharded`` runs stage 1 and then encodes the
+compressed sharded index straight from the tokenized frame — posting rows
+live only inside its single shuffle. The logical tables here are never
+written: they are the in-memory spec the exhaustive ``BM25SearchEngine``
+scores over and the tests check that build against, and
+``shards.export_index`` derives the same tables from a written sharded
+index. Segment merges and streamed segments go through the sharded
+encoder too (operators/merge.py).
 """
 
 from __future__ import annotations
 
-import hashlib
 from dataclasses import dataclass
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -63,29 +59,6 @@ from searchengine_spark.config import (
 )
 from searchengine_spark.functions import fieldsig, textproc
 from searchengine_spark.functions.udfs import extract_fields
-
-# Hash-bucket directory layout for the plain postings table. Directory
-# (partition-value) pruning on the query's bucket set replaces the old
-# term-sorted row-group pruning; measured on 177M postings/1M docs it
-# builds 2.4x faster (the (term, doc_id) external sort spilled heavily)
-# and writes half the bytes (doc-clustered arrival order dictionary-
-# compresses doc_id runs, which a term sort scatters).
-POSTING_BUCKETS = 64
-
-
-def term_bucket_col(term: Column) -> Column:
-    """JVM-side bucket id for a term; must stay in lock-step with
-    :func:`term_bucket` (the driver-side mirror used for pruning)."""
-    return F.pmod(
-        F.conv(F.substring(F.md5(term), 1, 8), 16, 10).cast("long"),
-        F.lit(POSTING_BUCKETS),
-    )
-
-
-def term_bucket(term: str) -> int:
-    """Driver-side mirror of :func:`term_bucket_col`."""
-    return int(hashlib.md5(term.encode()).hexdigest()[:8], 16) % POSTING_BUCKETS
-
 
 TOKENIZED_SCHEMA = StructType(
     [
@@ -307,9 +280,9 @@ def tokenize_documents(
 def term_frequencies(tokenized: DataFrame) -> DataFrame:
     """Field-weighted tf (indexer.py:92-107). The tf map is computed
     within-row in stage 1 (A1 aggregates over ONE document's tokens, never
-    across rows), so this is a pure map-side explode — NO shuffle. The only
-    shuffle in the whole posting build is the final repartition into the
-    hash-bucket directory layout."""
+    across rows), so this is a pure map-side explode — NO shuffle. The
+    production build's only shuffle is the posting-block encode exchange in
+    ``shards``."""
     return tokenized.select(
         "doc_id",
         "doc_len",
@@ -383,33 +356,3 @@ def build_index(pages: DataFrame) -> IndexTables:
     build against. Persisted indexes come from
     :func:`~searchengine_spark.operators.shards.build_and_write_sharded`."""
     return build_index_tables(tokenize_documents(pages))
-
-
-def write_index(tables: IndexTables, path: str, postings_partitions: int = 32) -> None:
-    """Persist the index. Postings land in ``POSTING_BUCKETS`` hash-bucket
-    directories; query-time term lookups prune whole directories via the
-    bucket-of-term filter (the distributed analog of the reference's
-    hash-dict lookup — same hash-addressed skip behavior, no sort)."""
-    tables.docs.write.mode("overwrite").parquet(f"{path}/docs")
-    (
-        tables.postings.withColumn("bucket", term_bucket_col(F.col("term")))
-        .repartition(postings_partitions, "bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{path}/postings")
-    )
-    tables.doc_stats.write.mode("overwrite").parquet(f"{path}/doc_stats")
-    tables.term_stats.repartition(max(1, postings_partitions // 4), "term").sortWithinPartitions(
-        "term"
-    ).write.mode("overwrite").parquet(f"{path}/term_stats")
-    tables.stats.write.mode("overwrite").parquet(f"{path}/stats")
-
-
-def read_index(spark: SparkSession, path: str) -> IndexTables:
-    return IndexTables(
-        docs=spark.read.parquet(f"{path}/docs"),
-        postings=spark.read.parquet(f"{path}/postings"),
-        doc_stats=spark.read.parquet(f"{path}/doc_stats"),
-        term_stats=spark.read.parquet(f"{path}/term_stats"),
-        stats=spark.read.parquet(f"{path}/stats"),
-    )

@@ -828,8 +828,8 @@ def term_skew_report(index: ShardedIndex, top_n: int = 20) -> DataFrame:
 
 
 def export_index(spark: SparkSession, index: ShardedIndex) -> "IndexTables":
-    """Compressed sharded blocks → the logical ``IndexTables`` layout (the
-    CLI's ``export``).
+    """Compressed sharded blocks → the in-memory logical ``IndexTables``
+    (what the exhaustive ``BM25SearchEngine`` scores over).
 
     Layout conversion never re-tokenizes. The blocks already carry every
     posting (term, docno, tf, doc_len) and ``docs_sharded`` carries doc
@@ -869,20 +869,3 @@ def export_index(spark: SparkSession, index: ShardedIndex) -> "IndexTables":
         term_stats=index.term_stats.select("term", "df", "idf"),
         stats=stats,
     )
-
-
-def export_and_write_index(
-    spark: SparkSession,
-    index: ShardedIndex,
-    path: str,
-    postings_partitions: int = 32,
-) -> "IndexTables":
-    """Export + persist in the standard logical layout (hash-bucket posting
-    directories; see ``index_build.write_index``) and return the re-read
-    tables — the exact shape ``BM25SearchEngine`` and the DuckDB-checkable
-    entry queries consume."""
-    from searchengine_spark.operators import index_build
-
-    tables = export_index(spark, index)
-    index_build.write_index(tables, path, postings_partitions)
-    return index_build.read_index(spark, path)

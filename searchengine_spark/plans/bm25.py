@@ -11,8 +11,7 @@ bench measures. A single query is a batch of one.
 
 Physical plan we engineer for (verified via .explain in tests):
 
-  * the union of all query terms → bucket-of-term partition-directory
-    pruning plus an IN-list literal pushed into the parquet/Iceberg scan —
+  * the union of all query terms → one IN-list filter on the postings —
     the distributed analog of the reference's dict lookup
     (indexer.py:384-394);
   * per-(query,term) idf/multiplicity/importance ride a **broadcast** join
@@ -275,16 +274,9 @@ class BM25SearchEngine:
         if qterms is None:
             return None
 
-        # Bucket-directory pruning (partition values never scanned) plus the
-        # term IN-list pushed into the parquet scan; broadcast join fans each
+        # term IN-list filter on the postings; broadcast join fans each
         # posting out to the queries containing its term.
-        postings = self.tables.postings
-        if "bucket" in postings.columns:
-            from searchengine_spark.operators.index_build import term_bucket
-
-            buckets = sorted({term_bucket(t) for t in term_list})
-            postings = postings.filter(F.col("bucket").isin(buckets))
-        postings = postings.filter(F.col("term").isin(term_list))
+        postings = self.tables.postings.filter(F.col("term").isin(term_list))
         # idf == 0 terms (in ≥ half the corpus) contribute 0 to every score
         # and cannot lift a doc past the post-normalize threshold — dropping
         # them is exact and prunes their whole posting scan out of the plan

@@ -37,9 +37,8 @@ def sharded(spark, pages, tmp_path_factory):
 
 
 @pytest.fixture(scope="module")
-def exported(spark, sharded, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("exported"))
-    return shards.export_and_write_index(spark, sharded, path, postings_partitions=4)
+def exported(spark, sharded):
+    return shards.export_index(spark, sharded)
 
 
 @pytest.fixture(scope="module")
@@ -206,7 +205,7 @@ def test_head_term_skew_is_neutralized(sharded):
             assert r["skew"] <= 2.0, r
 
 
-def test_cli_build_verify_query_export(spark, tmp_path, capsys):
+def test_cli_build_verify_merge_query(spark, tmp_path, capsys):
     """CLI over the one build path: `build` writes the sharded index and
     `verify` checks it (and fails on a corrupted meta.json). Two `build`
     outputs over doc-disjoint halves `merge` into one sharded index that

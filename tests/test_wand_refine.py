@@ -241,3 +241,17 @@ def test_lazy_persist_lifecycle_is_bounded(spark, many_shard_index):
     eng.search_batch(webgen.reference_queries()[:1], top_k=TOP_K).collect()
     if baseline_empty:  # don't assert global emptiness if other suites cached
         assert cm.isEmpty(), "search_batch leaked a cache entry"
+    # failing path: the direct probe raises on an in-memory index only after
+    # phase 1 was persisted, and the raise must drop that persist
+    from searchengine_spark.operators import merge
+
+    mem = merge.apply_tombstones(
+        spark, many_shard_index, spark.createDataFrame([], "doc_id string")
+    )
+    assert mem.path is None
+    with pytest.raises(ValueError, match="written index"):
+        WandSearchEngine(spark, mem).search_batch(
+            batch, top_k=TOP_K, docs_join="direct"
+        )
+    if baseline_empty:
+        assert cm.isEmpty(), "a failing search_batch leaked a cache entry"
